@@ -70,10 +70,6 @@ def dec_out(c: Column, alias: str, scale: int = 2) -> Column:
     return c.cast(f"decimal(38,{scale})").cast("string").alias(alias)
 
 
-def sql_dec_out(inner: str, alias: str, scale: int = 2) -> str:
-    return f"CAST(CAST({inner} AS DECIMAL(38,{scale})) AS VARCHAR) AS {alias}"
-
-
 def davg(e: Column, alias: str, ndigits: int = 6) -> Column:
     """Average as rounded double: exact decimal sum ÷ exact count."""
     return F.round(F.sum(e).cast("double") / F.count(F.lit(1)), ndigits).alias(alias)
@@ -214,11 +210,6 @@ def month_day(col_name: str = "ts") -> Column:
     return F.expr(
         f"(month({col_name}) - 1) * 31 + day({col_name})"
     ).cast("bigint")
-
-
-def sql_month_day(col_name: str = "ts") -> str:
-    """DuckDB fragment value-equal to :func:`month_day`."""
-    return f"CAST((month({col_name}) - 1) * 31 + day({col_name}) AS BIGINT)"
 
 
 def corr_from_moments(

@@ -246,10 +246,14 @@ def _dbl_bits_sql(s: str) -> str:
     """IEEE-754 bits of a DOUBLE scratch column as BIGINT (exact —
     reflection into Double.doubleToRawLongBits; JVM-internal, no Python
     boundary). +0.0 is added first so -0.0 and 0.0 share bits (the
-    engine-wide -0.0 normalization; x + 0.0 is the IEEE idiom)."""
+    engine-wide -0.0 normalization; x + 0.0 is the IEEE idiom). NULL
+    never reaches reflect (it aborts the job on a NULL argument): it
+    stays NULL, so its cell is NULL and it lands in bucket 0, as on the
+    int path."""
     return (
+        f"CASE WHEN `{s}` IS NULL THEN NULL ELSE "
         "CAST(reflect('java.lang.Double','doubleToRawLongBits', "
-        f"`{s}` + CAST(0.0 AS DOUBLE)) AS BIGINT)"
+        f"`{s}` + CAST(0.0 AS DOUBLE)) AS BIGINT) END"
     )
 
 
@@ -475,12 +479,6 @@ def desc_as_asc(c: Column) -> Column:
     a true DESC puts NaN first — for such keys negate directly and
     handle nulls explicitly."""
     return F.coalesce(-c, F.lit(float("inf")))
-
-
-def _le_pred(value: Column):
-    """Single-arg ``boundary <= value`` predicate with ``value`` bound
-    at definition time (not loop-late-bound)."""
-    return lambda b: b <= value
 
 
 def _eager_bucket_sums(

@@ -19,10 +19,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def to_double(v: Column) -> Column:
-    return F.transform(v, lambda x: x.cast("double"))
-
-
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product (matches DuckDB list_dot_product)."""
     return F.aggregate(
@@ -38,18 +34,6 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                a, b, lambda x, y: (x.cast("double") - y.cast("double")) ** 2
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
 
 
 def normalize(a: Column) -> Column:

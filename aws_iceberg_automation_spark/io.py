@@ -191,10 +191,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
-
-
 def rebalance_if_undersplit(df: DataFrame, key=None) -> DataFrame:
     """Round-robin rebalance to the session's parallelism when the scan
     undersplit the input (guide §2.5 input skew / §2.6 idle capacity).

@@ -79,19 +79,6 @@ def final_plan_string(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def final_join_strategies(df: DataFrame) -> list[str]:
-    """Join operators in the AQE-final executed plan (sorted)."""
-    return sorted(
-        set(
-            re.findall(
-                r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"
-                r"|BroadcastNestedLoopJoin|CartesianProduct)",
-                final_plan_string(df),
-            )
-        )
-    )
-
-
 def final_exchange_count(s: str) -> int:
     """Shuffle-exchange count in an executedPlan string (broadcast
     exchanges excluded — they are the CHEAP kind; the number that

@@ -65,6 +65,15 @@ def build_session_builder(
         # same for Python UDTFs (table functions)
         .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # Compile each generated class once per session. Spark's default
+        # 100-entry codegen cache cannot hold the engine's working set:
+        # the 17 bench queries generate about 300 classes per pass and
+        # the lakehouse lifecycle about 115, so at 100 every query
+        # recompiled every class on every call (2.5-3.3 s of Janino time
+        # in a ~12 s sf0.01 pass on 4 cores). 1024 gives ~3x headroom.
+        # bench.py hid this: it runs each query three times in a row, so
+        # its 2nd and 3rd runs hit the cache. Static conf: builder only.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     jar = iceberg_jar()
     if jar and warehouse:

@@ -26,6 +26,25 @@ def test_query_matches_oracle(name, spark, oracle_check):
         oracle_check(df, spec.oracle)
 
 
+def test_bench_queries_compile_each_class_once(spark):
+    """A second pass over the bench-tagged queries must hit the codegen
+    cache for every generated class: a cache smaller than their ~300
+    classes recompiles every class on every call (Spark's default 100
+    entries did), which costs seconds of Janino time per pass."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    bench = [n for n, s in SPECS.items() if "bench" in s.tags]
+    assert bench
+
+    def run_pass() -> int:
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        for name in bench:
+            SPECS[name].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        return codegen.METRIC_COMPILATION_TIME().getCount() - before
+
+    run_pass()
+    assert run_pass() == 0
+
+
 def test_driver_priority_names_exist():
     """Every name in the driver-ordering list must be a registered query
     (a stale name would silently waste a verification slot), and the

@@ -57,3 +57,10 @@ def test_local_profile_has_no_cloud_keys() -> None:
     assert opts.get("spark.sql.catalogImplementation") != "hive"
     assert opts["spark.sql.adaptive.enabled"] == "true"
     assert opts["spark.sql.session.timeZone"] == "UTC"
+
+
+def test_both_profiles_size_the_codegen_cache() -> None:
+    # Static conf: it only takes effect when set on the builder.
+    for profile in ("local", "cloud"):
+        opts = _options(build_session_builder(profile=profile))
+        assert opts.get("spark.sql.codegen.cache.maxEntries") == "1024", profile
