@@ -1,12 +1,11 @@
-"""Scale-safe top-N ranking without WindowExec.
+"""Scale-safe ranking without a single-partition window.
 
-`row_number() OVER (ORDER BY ...)` with no PARTITION BY moves the whole
-input to one task (Spark logs `WindowExec: No Partition Defined`). The
-repo's pre-bound pattern — `orderBy(...).limit(n)` compiling to
-TakeOrderedAndProject (per-partition top-n, single n-row merge) — fixes
-the data volume, but ranking the n survivors with another unpartitioned
-window still instantiates a WindowExec (harmless at n≤50, noisy in plan
-audits). This helper ranks the bounded survivors with no window at all:
+`row_number()`, `ntile()` or a running sum `OVER (ORDER BY ...)` with no
+PARTITION BY moves the whole input to one task (Spark logs `WindowExec:
+No Partition Defined`). This module replaces that window with two
+shapes.
+
+``topn_ranked`` ranks a bounded top-n with no window at all:
 
     top-n via TakeOrderedAndProject            (distributed, bounded)
     repartition(1) of n rows                   (trivial shuffle barrier —
@@ -16,9 +15,34 @@ audits). This helper ranks the bounded survivors with no window at all:
                                                (exact rank: partition 0 →
                                                 ids 0..n-1 in sort order)
 
-The sort keys must define a total order (callers always end with a
-unique tiebreak column), so the rank is deterministic and hash-stable
-against a SQL `row_number()` oracle.
+The bucket decompositions (``global_row_number``, ``global_ntile``,
+``global_ntiles``, ``partitioned_prefix_sums``, ``grouped_row_number``)
+rank every row: range-bucket on the order value with a MONOTONE
+bucketing (cross-bucket order is value order, and equal values always
+share a bucket), rank inside each bucket with a window PARTITIONED by
+the bucket, and add the bucket's exclusive-prefix offset. The bucket
+cuts and the per-bucket counts/sums come from ONE eager exact-histogram
+job (``_cells_hist_bucketize``) and are inlined into the plan as
+literals. Contracts shared by every decomposition:
+
+- The sort keys ``(value, *tiebreaks)`` must define a total order
+  (callers always end with a unique tiebreak column), so the rank is
+  deterministic and hash-stable against a SQL window oracle.
+- ``value`` is an integer, floating-point or DATE column; any other
+  type raises TypeError before any job runs (cast it first). A
+  streaming frame raises ValueError: the histogram is collected while
+  the plan is built.
+- NULL values land in bucket 0 and rank first, as in Spark's ascending
+  window (NULLS FIRST). An ANSI oracle's ``ORDER BY ... NULLS LAST``
+  differs, so coalesce or filter nullable dimensions where that
+  matters (``desc_as_asc`` does it for descending keys). NaN ranks
+  last, above +∞, as Spark sorts it.
+- DETERMINISTIC RE-EXECUTION: the histogram job and the main query are
+  separate executions of ``df``. The input must produce identical rows
+  on re-execution (static files or a ``checkpoint_df``-pinned frame), or
+  the inlined offsets mismatch the ranked rows and results are silently
+  wrong. Every registered caller reads fixtures or checkpoints; pin any
+  non-deterministic upstream before calling.
 """
 
 from __future__ import annotations
@@ -61,161 +85,84 @@ def cap_groups(
     )
 
 
-def _sql_num(v) -> str | None:
-    """Exact SQL-literal rendering of an int/float boundary for the
-    single-round-trip F.expr bucket strings, or None when the type has
-    no safe rendering (caller falls back to composed Columns).
+def _sql_num(v: int | float) -> str:
+    """Exact SQL-literal rendering of an int64 or float bucket bound
+    for the single-round-trip F.expr bucket strings.
 
     - int → ``<v>L`` (BIGINT literal; int-vs-wider comparisons promote
-      exactly as the old ``F.lit(int)`` did)
+      exactly as ``F.lit(int)`` does)
     - float → ``CAST('<repr>' AS DOUBLE)``: repr round-trips the exact
       binary value and Java's string→double parse is correctly rounded,
       so the literal is bit-identical to ``F.lit(float)``. (A bare
       decimal literal would parse as DECIMAL and the decimal→double
-      coercion is not guaranteed correctly rounded.)"""
-    if isinstance(v, bool):
-        return None
+      coercion is not guaranteed correctly rounded.) -0.0 renders as
+      0.0 (x + 0.0 is the IEEE idiom; comparison-wise identical): a
+      Literal(-0.0) inside one of several bucket CASE-sums in the SAME
+      projection trips a whole-stage-codegen subexpression-elimination
+      bug in Spark 4.1.2 — every term of the poisoned sum evaluates 0
+      under codegen (correct interpreted), so rows bucket differently
+      across plan paths. Found by
+      test_multi_ntile_matches_window_per_dimension's fuzz."""
     if isinstance(v, int):
-        return f"{v}L" if -(2**63) <= v < 2**63 else None
-    if isinstance(v, float):
-        if v != v:
-            return "CAST('NaN' AS DOUBLE)"
-        if v == float("inf"):
-            return "CAST('Infinity' AS DOUBLE)"
-        if v == float("-inf"):
-            return "CAST('-Infinity' AS DOUBLE)"
-        return f"CAST('{v!r}' AS DOUBLE)"
-    return None
+        return f"{v}L"
+    v += 0.0
+    if v != v:
+        return "CAST('NaN' AS DOUBLE)"
+    if v == float("inf"):
+        return "CAST('Infinity' AS DOUBLE)"
+    if v == float("-inf"):
+        return "CAST('-Infinity' AS DOUBLE)"
+    return f"CAST('{v!r}' AS DOUBLE)"
 
 
-def quantile_bucket_ranks(
-    df: DataFrame,
-    ranks: list[tuple[Column, str]],
-    n_buckets: int,
-) -> DataFrame:
-    """For each ``(value, out_name)`` pair, tag every row with a bucket
-    rank ∈ [0, n_buckets) that is MONOTONE in ``value`` (equal values
-    always share a bucket): rank = #(approx-quantile boundaries ≤
-    value), all boundary arrays computed in ONE agg, collected, and
-    inlined as literals — balanced under skew, unlike equi-width cuts.
-    NON-NULL value contract (shared by every global_* decomposition
-    built on this): percentile_approx SKIPS NULLs, so a NULL value
-    falls below every boundary and lands in bucket 0, and the
-    within-bucket rank window then orders it NULLS FIRST (Spark ASC
-    default) — which diverges from an oracle's ORDER BY ... NULLS LAST
-    (DuckDB/ANSI default). Callers must pre-coalesce or pre-filter
-    nullable dimensions (every registered consumer does: q208's RFM
-    dims are aggregates over non-null columns).
-    Batch frames only (the boundary collect is an eager tiny job). NB
-    the filter lambda must stay single-argument: PySpark calls a
-    two-argument HOF lambda as (element, index), so a captured default
-    would silently compare boundaries against 0..n_buckets-2."""
-    if df.isStreaming:
-        raise ValueError(
-            "quantile_bucket_ranks is batch-only: it collects quantile "
-            "boundaries eagerly at plan-build time, which a streaming "
-            "DataFrame cannot do"
-        )
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    stats_row = df.agg(
-        *[
-            F.percentile_approx(value, qs, 10_000).alias(f"_bounds_{name}")
-            for value, name in ranks
-        ]
-    ).collect()[0]
-    # Boundaries are collected ONCE and inlined as literals (they are
-    # n_buckets-1 scalars per rank). Rank/offset correctness requires
-    # every consumer branch to see the SAME boundary set; leaving the
-    # approx agg in the plan relied on broadcast-exchange reuse — if
-    # reuse is disabled or canonicalization misses, the agg re-runs
-    # with a different shuffle merge order and can yield divergent
-    # boundaries, i.e. silently wrong ranks on a real cluster. Literal
-    # boundaries make the sharing unconditional; at any scale this is
-    # one tiny job, same bytes moved as the broadcast it replaces.
-    # r10: each bucket column is built as ONE F.expr SQL string rather
-    # than a Python-composed chain of 63 when/otherwise Columns. In
-    # classic (py4j) mode every Column operation is a synchronous
-    # round-trip to the JVM; the composed form cost ~4,000 round-trips
-    # (~0.5 s of pure socket latency) per 3-dimension call at ANY data
-    # size (cProfile: 12k py4j sends = 2.1 s of q208's build). The
-    # value expression is materialized once under a scratch name so the
-    # SQL string can reference it; the parsed tree (CASE WHEN lit <=
-    # val THEN 1 ELSE 0 END summed left-associatively from 0) is
-    # semantically identical to the old when-chain, NULL → 0 included.
-    scratch = [f"_qbr_val_{name}" for _, name in ranks]
-    _check_names(df, *scratch)
-    out = df.select(
-        "*", *[value.alias(s) for (value, _), s in zip(ranks, scratch)]
+def _bucket_literal_expr(sname: str, bounds: list[int | float]) -> Column:
+    """Bucket = #(bound <= value) over the scratch column ``sname``, as
+    ONE F.expr CASE-sum string with the bounds inlined as literals.
+
+    One string, not a Python-composed chain of when/otherwise Columns:
+    in classic (py4j) mode every Column operation is a synchronous
+    round-trip to the JVM, and the composed form cost ~4,000 round-trips
+    (~0.5 s of socket latency) per 3-dimension call at ANY data size. A
+    sum of indicator terms, not filter(array<lit>, lambda): lambda
+    outer-references break under Catalyst's self-join attribute dedup
+    (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND when the bucketed frame joins a
+    frame derived from itself, as grouped consumers do); plain
+    comparisons survive any rewrite. A NULL value compares NULL against
+    every bound and lands in bucket 0. Shared with the z-order layout
+    (sources/layout.py)."""
+    if not bounds:
+        # n_buckets=1 or an empty input: the joined string would be
+        # "CAST( AS INT)", a ParseException
+        return F.lit(0)
+    terms = " + ".join(
+        f"(CASE WHEN {_sql_num(b)} <= `{sname}` THEN 1 ELSE 0 END)"
+        for b in bounds
     )
-    for (value, name), sname in zip(ranks, scratch):
-        bounds = stats_row[f"_bounds_{name}"]
-        # None: empty input frame. Empty list: n_buckets=1 (qs == []) —
-        # without this short-circuit the joined SQL string would be
-        # "CAST( AS INT)", a ParseException (ADVICE r10).
-        if not bounds:
-            out = out.withColumn(name, F.lit(0))
-            continue
-        # Normalize -0.0 boundaries to +0.0 (x + 0.0 is the IEEE idiom;
-        # comparison-wise identical). A Literal(-0.0) inside one of
-        # several bucket when-chains in the SAME projection trips a
-        # whole-stage-codegen subexpression-elimination bug in Spark
-        # 4.1.2 — every term of the poisoned chain evaluates 0 under
-        # codegen (correct interpreted), so two rows with value 0.0
-        # bucket differently across plan paths and the offsets join
-        # returns EMPTY. -0.0 boundaries are reachable: percentile over
-        # a column that contains -0.0, e.g. anything through
-        # desc_as_asc's negation of a 0.0. Found by
-        # test_multi_ntile_matches_window_per_dimension's fuzz.
-        # (floats only: integer-typed boundaries must stay integers or
-        # the literal would silently widen the comparison to double)
-        bounds = [b + 0.0 if isinstance(b, float) else b for b in bounds]
-        # Sum of indicator terms, not filter(array<lit>, lambda): lambda
-        # outer-references break under Catalyst's self-join attribute
-        # dedup (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND when the bucketed
-        # frame joins a frame derived from itself, as grouped consumers
-        # can). Plain comparisons survive any rewrite. Non-int/float
-        # boundary types fall back to the composed when-chain inside
-        # _bucket_literal_expr (shared with the r11 histogram path).
-        out = out.withColumn(name, _bucket_literal_expr(sname, bounds))
-    return out.drop(*scratch)
+    return F.expr(f"CAST({terms} AS INT)")
 
 
 # --------------------------------------------------------------------
-# r11: single-pass eager bucketization (guide §2.4 — remove shuffles/
-# jobs outright; VERDICT r10 ask #3). The r10 decomposition shape ran
-# TWO sequential eager jobs before the main query — a percentile_approx
-# boundary agg, then a per-bucket count/sum agg over the bucketed frame
-# — because bucket membership depends on the boundaries. This replaces
-# both with ONE exact histogram job: every value is quantized to a
-# bounded-cardinality integer CELL by an *exactly monotone* map
-# (bit tricks below — never floating log/quantile arithmetic, whose
-# 1-ulp wobble could misorder adjacent values and silently corrupt
-# ranks), the per-cell exact counts/sums are collected once, and both
+# Exact-histogram bucketization. Every value is quantized to a
+# bounded-cardinality integer CELL by an *exactly monotone* map (bit
+# tricks below — never floating log/quantile arithmetic, whose 1-ulp
+# wobble could misorder adjacent values and silently corrupt ranks).
+# ONE eager job collects the exact per-cell counts (and sums), and both
 # the quantile-balanced bucket cuts AND the per-bucket offsets derive
 # from that one collected frame in Python. The cuts are then inverted
-# back to exact VALUE-space literals, so the main plan keeps the
-# identical r10 CASE-sum bucket expression (no reflect/bin anywhere in
-# the per-row path) and the decomposition executes its input TWICE
-# (histogram + main) instead of three times.
-#
-# Correctness: ranks/ntiles/prefix sums are exact under ANY monotone
-# bucketing (cross-bucket order = value order, ties never straddle a
-# bucket), so swapping percentile_approx cuts for histogram cuts is
-# results-identical by construction; only balance could differ, and the
-# cells are fine enough (≥256 cells per binary octave) that cut quality
-# matches approx-quantiles for any data spanning a few percent of
-# relative range. Deterministic-re-execution contract (ADVICE r10):
-# the input frame must produce identical rows on re-execution (static
-# files or checkpoint_df-pinned) — offsets collected here are inlined
-# into the main plan, so a frame that re-executes differently would
-# rank wrong. All registered callers read static fixtures or
-# checkpoints; q208 pins per_cust explicitly.
+# back to exact VALUE-space literals, so the main plan buckets with the
+# plain CASE-sum of _bucket_literal_expr (no reflect/bin anywhere in the
+# per-row path) and the decomposition executes its input twice:
+# histogram + main. Ranks/ntiles/prefix sums are exact under ANY
+# monotone bucketing; only balance depends on the cuts, and the cells
+# are fine enough (≥256 cells per binary octave) to balance any data
+# spanning a few percent of relative range.
 
 _INT_KINDS = {"tinyint", "smallint", "int", "bigint"}
 _DBL_KINDS = {"float", "double"}
 _I64_MIN = -(2**63)
-_NAN_CELL = _I64_MIN  # NaN forced below every real cell → bucket 0,
-# matching the main plan's CASE (every `lit <= NaN` is false → 0)
+_NAN_CELL = 2**63 - 1  # NaN forced above every real cell → last bucket,
+# matching Spark's NaN semantics in the main plan's CASE (NaN is larger
+# than every other double, so every `lit <= NaN` is true)
 _DBL_CELL_SHIFT = 44  # sortable-bits >> 44: 256 cells/octave, ≤ ~1M
 # possible cells across the entire double range (the collect bound)
 
@@ -260,9 +207,9 @@ def _dbl_bits_sql(s: str) -> str:
 def _dbl_cell_sql(val: str, bits: str) -> str:
     """Monotone cell from the bits column: the standard sign-flip makes
     the bit pattern totally ordered as a signed long (negative doubles
-    get their low 63 bits flipped), then >> 44 buckets it. NaN is
-    forced to the below-everything marker so the histogram agrees with
-    the main plan's CASE-sum (where every `lit <= NaN` is false)."""
+    get their low 63 bits flipped), then >> 44 buckets it. NaN (whose
+    bit patterns sit at both ends) is forced to the above-everything
+    marker so the histogram agrees with the main plan's CASE-sum."""
     flip = f"(`{bits}` ^ (shiftright(`{bits}`, 63) & {2**63 - 1}L))"
     return (
         f"CASE WHEN isnan(`{val}`) THEN {_NAN_CELL}L "
@@ -288,9 +235,12 @@ def _int_cell_min(k: int) -> int:
 
 def _dbl_cell_min(k: int) -> float:
     """Smallest double whose _dbl_cell_sql cell is ``k``: invert the
-    sign-flip on the cell's smallest sortable bit pattern. Exact."""
+    sign-flip on the cell's smallest sortable bit pattern. Exact. The
+    NaN cell's threshold is NaN itself: only NaN is ``>=`` it."""
     import struct
 
+    if k == _NAN_CELL:
+        return float("nan")
     s = k << _DBL_CELL_SHIFT
     bits = s if s >= 0 else s ^ (2**63 - 1)
     v = struct.unpack("<d", struct.pack("<q", bits))[0]
@@ -299,26 +249,7 @@ def _dbl_cell_min(k: int) -> float:
         # patterns below it; no real value sits under -inf, and NaN
         # inputs are forced to _NAN_CELL, so -inf is the true minimum
         return float("-inf")
-    return v + 0.0  # never emit a -0.0 literal (codegen CSE bug, r10)
-
-
-def _bucket_literal_expr(sname: str, bounds: list) -> Column:
-    """#(bound <= value) as one F.expr CASE-sum string over the scratch
-    column — the r10 single-round-trip literal form (see
-    quantile_bucket_ranks for the full rationale), shared by the
-    percentile and histogram bucketization paths."""
-    if not bounds:
-        return F.lit(0)
-    lits = [_sql_num(b) for b in bounds]
-    if all(s is not None for s in lits):
-        terms = " + ".join(
-            f"(CASE WHEN {s} <= `{sname}` THEN 1 ELSE 0 END)" for s in lits
-        )
-        return F.expr(f"CAST({terms} AS INT)")
-    return sum(
-        (F.when(F.lit(b) <= F.col(sname), 1).otherwise(0) for b in bounds),
-        start=F.lit(0),
-    ).cast("int")
+    return v
 
 
 def _pick_cuts_and_totals(
@@ -328,7 +259,8 @@ def _pick_cuts_and_totals(
     first): quantile-balanced cut cells (bucket b = #(cut <= cell)),
     exact per-bucket counts, exact per-bucket sums. Pure integer
     arithmetic — cum·n_buckets ≥ (len+1)·total is the exact form of
-    cum ≥ (len+1)·total/n_buckets."""
+    cum ≥ (len+1)·total/n_buckets. A cut is always a cell after the
+    first entry, so the NULL cell stays in bucket 0."""
     import bisect
 
     total = sum(e[1] for e in entries)
@@ -341,9 +273,7 @@ def _pick_cuts_and_totals(
             and i + 1 < len(entries)
             and cum * n_buckets >= (len(cuts) + 1) * total
         ):
-            nxt = entries[i + 1][0]
-            if nxt is not None and nxt != _NAN_CELL:
-                cuts.append(nxt)
+            cuts.append(entries[i + 1][0])
     counts = [0] * n_buckets
     sums = [[0] * n_buckets for _ in range(n_sums)]
     for e in entries:
@@ -360,24 +290,27 @@ def _cells_hist_bucketize(
     ranks: list[tuple[Column, str]],
     n_buckets: int,
     sum_cols: list[str] | None = None,
-):
-    """ONE eager job replacing the boundary-agg + bucket-sums pair:
-    exact per-cell histogram (explode-per-dimension when multi-rank, so
-    the collect is bounded by dims × cells, never a cell cross
-    product), Python-side balanced cuts + exact offsets, and bucket
-    columns rebuilt as value-space literal CASE-sums. Returns
-    ``(bucketed_df, counts_by_bucket_col, sums_by_col)`` or None when a
-    value dtype is outside the exact-cell domain (then callers fall
-    back to the r10 two-job percentile path — also the
-    SPARK_GRAFT_SINGLEPASS_BUCKETS=0 kill-switch, for A/Bs).
-    ``sum_cols`` requires a single rank and integer-typed columns
-    (the _eager_bucket_sums exactness contract)."""
-    import os
+) -> tuple[DataFrame, dict[str, list[int]], dict[str, list[int]]]:
+    """Tag ``df`` with one bucket column per ``(value, name)`` pair in
+    ONE eager job: exact per-cell histogram (explode-per-dimension when
+    multi-rank, so the collect is bounded by dims × cells, never a cell
+    cross product), Python-side balanced cuts + exact offsets, and
+    bucket columns rebuilt as value-space literal CASE-sums. Returns
+    ``(bucketed_df, counts_by_bucket_col, sums_by_col)``. Integer values
+    cell as BIGINT, DATE values as their BIGINT ``unix_date`` day
+    number, float/double values through their IEEE bits; any other type
+    raises TypeError before any job runs.
 
+    ``sum_cols`` requires a single rank and integer-typed columns, so
+    the Python prefix sums downstream are exact (callers pass counts or
+    integer cents/micros). NULL sum values contribute nothing (SUM skips
+    NULLs)."""
     if df.isStreaming:
-        return None  # the legacy path raises the batch-only error
-    if os.environ.get("SPARK_GRAFT_SINGLEPASS_BUCKETS", "1") == "0":
-        return None
+        raise ValueError(
+            "the ranking decompositions are batch-only: they collect a "
+            "histogram eagerly at plan-build time, which a streaming "
+            "DataFrame cannot do"
+        )
     if sum_cols and len(ranks) != 1:
         raise ValueError("sum_cols requires exactly one rank dimension")
     names = [n for _, n in ranks]
@@ -385,24 +318,30 @@ def _cells_hist_bucketize(
         *[v.alias(f"_p{i}") for i, (v, _) in enumerate(ranks)]
     )
     kinds: list[str] = []
-    for f in probe.schema.fields:
+    vals: list[Column] = []
+    for (v, _), f in zip(ranks, probe.schema.fields):
         t = f.dataType.simpleString()
         if t in _INT_KINDS:
             kinds.append("int")
+            vals.append(v.cast("bigint"))
+        elif t == "date":
+            kinds.append("int")
+            vals.append(F.unix_date(v).cast("bigint"))
         elif t in _DBL_KINDS:
             kinds.append("dbl")
+            vals.append(v.cast("double"))
         else:
-            return None
+            raise TypeError(
+                f"ranking value {v} has type {t}; the decompositions "
+                "bucket integer, floating-point and date values only — "
+                "cast it first"
+            )
     val_cols = [f"_qbr_val_{n}" for n in names]
     cell_cols = [f"_qbr_cell_{n}" for n in names]
     bits_cols = [f"_qbr_bits_{n}" for n in names]
     _check_names(df, *val_cols, *cell_cols, *bits_cols)
     out = df.select(
-        "*",
-        *[
-            (v.cast("bigint") if k == "int" else v.cast("double")).alias(s)
-            for (v, _), k, s in zip(ranks, kinds, val_cols)
-        ],
+        "*", *[v.alias(s) for v, s in zip(vals, val_cols)]
     )
     # Histogram branch: project only the needed columns before the agg
     # (guide §2.3), materialize bits, then cells, then aggregate.
@@ -481,54 +420,6 @@ def desc_as_asc(c: Column) -> Column:
     return F.coalesce(-c, F.lit(float("inf")))
 
 
-def _eager_bucket_sums(
-    b: DataFrame,
-    specs: list[tuple[str, Column, str]],
-    n_buckets: int,
-) -> dict[str, list[int]]:
-    """Per-bucket integer sums for every ``(bucket_col, value_expr,
-    name)`` spec in ONE tiny eager job: a grouped aggregate over the
-    distinct bucket columns (map-side partial agg → at most
-    n_buckets^|distinct bucket cols| rows cross the wire — 64 for the
-    single-dimension helpers, capped at 64³ ≈ 262k tiny rows for
-    q208's three dimensions, INPUT-SIZE-INDEPENDENT), collected and
-    re-accumulated per dimension in Python.
-
-    This replaces the old in-plan scaffolding (per-bucket groupBy →
-    triangular broadcast self-join → broadcast back), which cost each
-    decomposition 2-3 extra Exchanges plus 1-2 BroadcastExchange jobs
-    PER DIMENSION at any scale (guide §2.4: remove shuffles outright).
-    (A one-row agg of n_buckets conditional sums per spec was measured
-    and rejected: 192 aggregate expressions took ~3.5 s of codegen
-    compile per call at any input size; the grouped form is ~1 s and
-    has no expression blow-up.)
-
-    Integer-exactness contract: every value_expr is integer-typed
-    (callers pass counts or integer-cent/micro columns), so the Python
-    prefix sums downstream are exact. NULL values contribute nothing
-    (SUM skips NULLs), matching the old per-bucket groupBy sums."""
-    bcs = list(dict.fromkeys(bc for bc, _, _ in specs))
-    if len(bcs) > 3:
-        raise ValueError(
-            f"{len(bcs)} bucket dimensions would collect up to "
-            f"{n_buckets}^{len(bcs)} group rows — cap is 3 dimensions"
-        )
-    aggs = [
-        F.sum(val).cast("bigint").alias(f"_ebs_{i}")
-        for i, (_, val, _) in enumerate(specs)
-    ]
-    rows = b.groupBy(*bcs).agg(*aggs).collect()
-    out: dict[str, list[int]] = {name: [0] * n_buckets for _, _, name in specs}
-    nb = len(bcs)
-    pos = [(bcs.index(bc), nb + i, name) for i, (bc, _, name) in enumerate(specs)]
-    for r in rows:  # positional access: Row.__getitem__(str) is slow × 262k
-        for bpos, vpos, name in pos:
-            v = r[vpos]
-            if v is not None:
-                out[name][r[bpos]] += v
-    return out
-
-
 def _exclusive_prefix(counts: list[int]) -> list[int]:
     """Exclusive prefix sums of a per-bucket count/sum list (exact —
     Python ints)."""
@@ -549,14 +440,6 @@ def _offset_lookup(off: list[int], bucket_col: str) -> Column:
     return F.expr(f"element_at(array({arr}), `{bucket_col}` + 1)")
 
 
-def _with_value_buckets(
-    df: DataFrame, value: Column, n_buckets: int
-) -> DataFrame:
-    """quantile_bucket_ranks for the single ``_bucket`` column the rank
-    and prefix-sum decompositions key on."""
-    return quantile_bucket_ranks(df, [(value, "_bucket")], n_buckets)
-
-
 def _bucket_offsets(
     per_bucket: DataFrame,
     cnt_cols: list[str],
@@ -565,10 +448,10 @@ def _bucket_offsets(
     """Exclusive prefix sums of ``cnt_cols`` over ``_bucket`` order —
     within each ``group_cols`` group when given — via a triangular
     broadcast self-join on the ≤|groups|·n_buckets bucket-total rows;
-    no WindowExec anywhere. (r10: only ``grouped_row_number`` still
-    uses this — |groups|·n_buckets offsets can reach thousands×64,
-    too many for the literal-array inlining the ungrouped helpers
-    switched to; a broadcast join is the right shape there.) Group equality is NULL-SAFE (a NULL group
+    no WindowExec anywhere. Used by ``grouped_row_number`` only:
+    |groups|·n_buckets offsets can reach thousands×64, too many for the
+    literal-array inlining of the ungrouped helpers, so a broadcast join
+    is the right shape there. Group equality is NULL-SAFE (a NULL group
     key is a real group, exactly as PARTITION BY treats it). Returns
     (*group_cols, _bucket, _off_<col>...)."""
     group_cols = group_cols or []
@@ -601,53 +484,22 @@ def global_row_number(
     rank_name: str = "rk",
 ) -> DataFrame:
     """Exact global ``row_number() OVER (ORDER BY value, *tiebreaks)``
-    WITHOUT a single-partition window: range-bucket on the value
-    (monotone ⇒ cross-bucket order equals value order), per-bucket
-    counts prefix-summed through a tiny broadcast triangular join, and
-    a PARTITIONED rank window inside each bucket. Every stage is
-    bounded: the widest window sees ~N/n_buckets rows (tune n_buckets
-    to the cluster; boundaries come from approx quantiles, so skewed
-    score distributions still ~balance). (value, *tiebreaks) must be a
-    total order for a deterministic result.
-
-    Pass budget: the plan reads the base three times (boundary agg,
-    bucket-count agg, main — the first two are tiny one-row/one-array
-    eager jobs). A spark_partition_id()-based variant over
-    repartitionByRange was measured and rejected — the nondeterministic
-    partition-id expression blocks exchange reuse, so it also runs
-    three scans while giving up deterministic, testable bucketing. At
-    extreme input sizes, persist() the projected (value, tiebreaks)
-    frame before calling; the decomposition itself never concentrates
-    data.
-
-    r10 optimization (guide §2.4): per-bucket counts are ≤ n_buckets
-    bigints, so the offsets come from one tiny eager agg inlined as a
-    literal array lookup instead of the old groupBy → triangular
-    broadcast self-join → broadcast-join-back scaffolding. Identical
-    ranks (same integers, same window), 3 fewer Exchanges + 2 fewer
-    broadcast jobs in the plan. r11: for int/double values the
-    boundary agg and the count agg merge into ONE exact-histogram
-    eager job (_cells_hist_bucketize) — same ranks (any monotone
-    bucketing is results-identical), one fewer eager job and one fewer
-    input execution at any scale.
-    DETERMINISTIC-RE-EXECUTION CONTRACT (ADVICE r10): the eager
-    histogram/boundary job and the main query are separate executions
-    of ``df`` — the input must produce identical rows on re-execution
-    (static files or a checkpoint_df-pinned frame), or the inlined
-    offsets mismatch the ranked rows and results are silently wrong.
-    Every registered caller reads fixtures or checkpoints; pin any
-    non-deterministic upstream before calling.
-    """
+    WITHOUT a single-partition window: histogram-bucket on the value,
+    add each bucket's exclusive-prefix count (a literal lookup) to a
+    PARTITIONED rank window inside the bucket. Every stage is bounded:
+    the widest window sees ~N/n_buckets rows (tune n_buckets to the
+    cluster; the cuts are quantile-balanced, so skewed score
+    distributions still ~balance). The input executes twice: the eager
+    histogram job and the main query. At extreme input sizes, persist()
+    the projected (value, tiebreaks) frame before calling; the
+    decomposition itself never concentrates data. (A
+    spark_partition_id()-based variant over repartitionByRange was
+    measured and rejected: the nondeterministic partition-id expression
+    blocks exchange reuse and gives up deterministic, testable
+    bucketing.) See the module docstring for the shared contracts."""
     _check_names(df, rank_name, "_bucket")
-    res = _cells_hist_bucketize(df, [(value, "_bucket")], n_buckets)
-    if res is not None:
-        b, counts = res[0], res[1]["_bucket"]
-    else:
-        b = _with_value_buckets(df, value, n_buckets)
-        counts = _eager_bucket_sums(
-            b, [("_bucket", F.lit(1), "cnt")], n_buckets
-        )["cnt"]
-    off = _exclusive_prefix(counts)
+    b, counts, _ = _cells_hist_bucketize(df, [(value, "_bucket")], n_buckets)
+    off = _exclusive_prefix(counts["_bucket"])
     w = Window.partitionBy("_bucket").orderBy(value, *tiebreaks)
     return (
         b.withColumn(
@@ -669,37 +521,16 @@ def global_ntile(
 ) -> DataFrame:
     """Exact ``ntile(k) OVER (ORDER BY value, *tiebreaks)`` without a
     single-partition window: the ``global_row_number`` decomposition
-    plus ntile's closed-form tile assignment — with n = q·k + r, tiles
-    1..r hold q+1 rows, tiles r+1..k hold q (when n < k every rank
-    lands in the first block, so the q=0 division branch is never
-    evaluated). Same integer tiles as the window form, same hash.
-    The total row count and the bucket offsets come from the same tiny
-    eager per-bucket-count agg (≤ n_buckets bigints — see
-    ``_eager_bucket_sums``), inlined as literals; all scaffolding uses
-    ``_gn_`` names so caller columns — including one named like
-    ``out_name``'s default — can never be clobbered.
-    ``value`` must be NON-NULL (quantile_bucket_ranks contract: NULLs
-    bucket to 0 and rank NULLS FIRST, diverging from ANSI NULLS LAST) —
-    coalesce or filter nullable dimensions before tiling.
-    DETERMINISTIC-RE-EXECUTION CONTRACT (ADVICE r10): the eager
-    histogram/boundary job and the main query are separate executions
-    of ``df`` — the input must produce identical rows on re-execution
-    (static files or a checkpoint_df-pinned frame), or the inlined
-    offsets mismatch the ranked rows and results are silently wrong.
-    Every registered caller reads fixtures or checkpoints; pin any
-    non-deterministic upstream before calling.
-    """
+    plus ntile's closed-form tile assignment (``_ntile_expr``), with the
+    total row count taken from the same histogram. Same integer tiles as
+    the window form, same hash. All scaffolding uses ``_gn_`` names so
+    caller columns — including one named like ``out_name``'s default —
+    can never be clobbered. See the module docstring for the shared
+    contracts."""
     _check_names(df, out_name, "_bucket", "_gn_rk")
-    res = _cells_hist_bucketize(df, [(value, "_bucket")], n_buckets)
-    if res is not None:
-        b, counts = res[0], res[1]["_bucket"]
-    else:
-        b = _with_value_buckets(df, value, n_buckets)
-        counts = _eager_bucket_sums(
-            b, [("_bucket", F.lit(1), "cnt")], n_buckets
-        )["cnt"]
-    off = _exclusive_prefix(counts)
-    n_total = sum(counts)
+    b, counts, _ = _cells_hist_bucketize(df, [(value, "_bucket")], n_buckets)
+    off = _exclusive_prefix(counts["_bucket"])
+    n_total = sum(counts["_bucket"])
     w = Window.partitionBy("_bucket").orderBy(value, *tiebreaks)
     rn = (
         b.withColumn(
@@ -716,8 +547,8 @@ def global_ntile(
 
 def _ntile_expr(rank: Column, k: int, n_total: int) -> Column:
     """ntile's closed-form tile from an exact 1-based global rank and
-    the exact total row count ``n_total`` (a Python int — the eager
-    count agg's sum, exact): with n = q·k + r, tiles 1..r hold q+1
+    the exact total row count ``n_total`` (a Python int — the
+    histogram's total, exact): with n = q·k + r, tiles 1..r hold q+1
     rows, tiles r+1..k hold q. When n < k every rank lands in the
     first block, so the q=0 division branch is never evaluated."""
     q_sz, r_sz = divmod(n_total, k)
@@ -746,52 +577,29 @@ def global_ntiles(
     the RFM-style segmentations need.
 
     Chaining ``global_ntile`` per dimension is correct but
-    constant-heavy: each call starts with an eager quantile-boundary
-    collect whose plan CONTAINS every previous dimension's
-    join+window decomposition, so dimension i's tiny boundary job
-    drags i-1 windows' worth of codegen and execution behind it (the
-    74-shuffle q208 profile). This form hoists the eager part: ONE
-    boundary job computes every dimension's bucket cuts over the plain
-    input frame, ONE one-row eager agg computes every dimension's
+    constant-heavy: each call starts with an eager histogram collect
+    whose plan CONTAINS every previous dimension's window
+    decomposition, so dimension i's tiny eager job drags i-1 windows'
+    worth of codegen and execution behind it (the 74-shuffle q208
+    profile). This form hoists the eager part: ONE histogram job over
+    the plain input frame yields every dimension's bucket cuts and
     per-bucket counts (≤ dims × n_buckets bigints, inlined as literal
-    offset/total lookups — no counts groupBys, no triangular broadcast
-    joins, no ntot cross join in the plan), and only the cheap
+    offset/total lookups — no joins in the plan), and only the cheap
     partitioned rank windows chain — one repartition per dimension,
-    which is the irreducible cost of k independent global orders.
-    Tile semantics, determinism contract ((value_i, *tiebreaks) total
-    order per dimension), the NON-NULL value contract, and hashes are
-    identical to ``global_ntile``. (The r10 literal-offsets rewrite
-    took q208's AQE-final plan from 27 exchanges / 26 jobs to the
-    irreducible per-dimension windows — see OPTIMIZATION_r10.md.)
-    
-    DETERMINISTIC-RE-EXECUTION CONTRACT (ADVICE r10): the eager
-    histogram/boundary job and the main query are separate executions
-    of ``df`` — the input must produce identical rows on re-execution
-    (static files or a checkpoint_df-pinned frame), or the inlined
-    offsets mismatch the ranked rows and results are silently wrong.
-    Every registered caller reads fixtures or checkpoints; pin any
-    non-deterministic upstream before calling.
-    """
+    which is the irreducible cost of k independent global orders. Tile
+    semantics and hashes are identical to ``global_ntile``; see the
+    module docstring for the shared contracts."""
     names = [n for _, n in specs]
     buckets = [f"_bucket_{n}" for n in names]
     rks = [f"_gn_rk_{n}" for n in names]
     _check_names(df, *names, *buckets, *rks)
-    res = _cells_hist_bucketize(
+    b, counts, _ = _cells_hist_bucketize(
         df, [(v, bc) for (v, _), bc in zip(specs, buckets)], n_buckets
     )
-    if res is not None:
-        b, sums = res[0], res[1]
-    else:
-        b = quantile_bucket_ranks(
-            df, [(v, bc) for (v, _), bc in zip(specs, buckets)], n_buckets
-        )
-        sums = _eager_bucket_sums(
-            b, [(bc, F.lit(1), bc) for bc in buckets], n_buckets
-        )
-    n_total = sum(sums[buckets[0]])
+    n_total = sum(counts[buckets[0]])
     out = b
     for (value, name), bcol, rk in zip(specs, buckets, rks):
-        off = _exclusive_prefix(sums[bcol])
+        off = _exclusive_prefix(counts[bcol])
         w = Window.partitionBy(bcol).orderBy(value, *tiebreaks)
         out = out.withColumn(
             rk,
@@ -815,40 +623,22 @@ def partitioned_prefix_sums(
     bucket/offset decomposition as ``global_row_number``, with the
     within-bucket cumulative window PARTITIONED by bucket. ``value``
     must be unique per row (e.g. the output of a groupBy on it) UNLESS
-    ``tiebreaks`` completes it to a total order — quantile buckets are
+    ``tiebreaks`` completes it to a total order — the buckets are
     MONOTONE (equal values always share a bucket), so a tie never
     spans buckets and the within-bucket (value, *tiebreaks) order is
     the global one. Passing tiebreaks instead of pre-ranking the frame
     (the old q209 shape: global_row_number → prefix sums over rk) is
-    one decomposition instead of two chained ones — the second
-    boundary collect used to re-execute the whole rank plan.
+    one decomposition instead of two chained ones.
 
     INTEGER ``sum_cols`` contract (every registered caller passes
-    counts or integer cents/micros): the per-bucket offsets are summed
-    exactly as Python ints in one tiny eager agg and inlined as
-    literals (see ``_eager_bucket_sums``) — same integers the old
-    in-plan triangular broadcast join produced, minus its 2-3
-    Exchanges and broadcast jobs.
-    DETERMINISTIC-RE-EXECUTION CONTRACT (ADVICE r10): the eager
-    histogram/boundary job and the main query are separate executions
-    of ``df`` — the input must produce identical rows on re-execution
-    (static files or a checkpoint_df-pinned frame), or the inlined
-    offsets mismatch the ranked rows and results are silently wrong.
-    Every registered caller reads fixtures or checkpoints; pin any
-    non-deterministic upstream before calling.
-    """
+    counts or integer cents/micros): the per-bucket sums come from the
+    histogram job as exact Python ints and are inlined as literal
+    offsets. See the module docstring for the shared contracts."""
     tiebreaks = tiebreaks or []
     _check_names(df, "_bucket", *[f"cum_{c}" for c in sum_cols])
-    res = _cells_hist_bucketize(
+    b, _, sums = _cells_hist_bucketize(
         df, [(value, "_bucket")], n_buckets, sum_cols=sum_cols
     )
-    if res is not None:
-        b, sums = res[0], res[2]
-    else:
-        b = _with_value_buckets(df, value, n_buckets)
-        sums = _eager_bucket_sums(
-            b, [("_bucket", F.col(c), c) for c in sum_cols], n_buckets
-        )
     w = (
         Window.partitionBy("_bucket")
         .orderBy(value, *tiebreaks)
@@ -895,21 +685,23 @@ def grouped_row_number(
     value, *tiebreaks)`` for FEW, HUGE groups — the regime where a
     plain partitioned window is a trap (5 market segments over 10^8
     customers = 5 hot single-task partitions). Same decomposition as
-    ``global_row_number``, group-aware: one GLOBAL set of approx
-    quantile boundaries (monotone in ``value``, hence monotone within
-    every group), per-(group, bucket) counts prefix-summed through a
-    broadcast triangular join keyed on the group, and a window
-    PARTITIONED by (group, bucket) — the widest task sees
-    ~N/(|groups|·n_buckets) rows.
+    ``global_row_number``, group-aware: one GLOBAL set of histogram
+    buckets (monotone in ``value``, hence monotone within every group),
+    per-(group, bucket) counts prefix-summed through a broadcast
+    triangular join keyed on the group, and a window PARTITIONED by
+    (group, bucket) — the widest task sees ~N/(|groups|·n_buckets)
+    rows. The input executes three times: the histogram job, the
+    per-(group, bucket) counts and the ranked rows.
 
     Contract: the counts frame is |groups| × n_buckets rows and is
     broadcast — use this helper when groups are few (≤ thousands).
     Numerous small groups don't need it: a window partitioned by the
     group key alone is already scale-safe. NULL group keys are a real
     group (exactly as PARTITION BY treats them): both the offset join
-    and the final bucket join are NULL-SAFE, so no row is dropped."""
+    and the final bucket join are NULL-SAFE, so no row is dropped. See
+    the module docstring for the shared contracts."""
     _check_names(df, rank_name, "_bucket", "_off__cnt")
-    b = _with_value_buckets(df, value, n_buckets)
+    b = _cells_hist_bucketize(df, [(value, "_bucket")], n_buckets)[0]
     counts = b.groupBy(*group_cols, "_bucket").agg(
         F.count(F.lit(1)).alias("_cnt")
     )

@@ -206,21 +206,22 @@ def rebalance_if_undersplit(df: DataFrame, key=None) -> DataFrame:
     plan is unchanged exactly where the extra shuffle would hurt.
     (Same pattern the LSH pipeline has carried since round 4; hoisted
     here so every operator shares one audited implementation.)"""
-    if os.environ.get("SPARK_GRAFT_REBALANCE_UNDERSPLIT", "1") == "0":
-        return df  # measurement/ops kill-switch, parameterized per §2
     par = df.sparkSession.sparkContext.defaultParallelism
     # Probe with inputFiles() — pure plan metadata — NOT
     # .rdd.getNumPartitions(): under AQE, .rdd on a frame with upstream
     # shuffles eagerly EXECUTES those stages and discards the work when
     # the frame is then used as a DataFrame (the _banded_postings
-    # lesson, ADVICE r10). Non-scan frames (inputFiles() empty) skip
-    # the guard: their upstream shuffle already wrote
-    # spark.sql.shuffle.partitions splits. Caveat vs the old probe: a
-    # single file BIGGER than maxPartitionBytes would split fine at
-    # scan yet still count as 1 here — acceptable, because the guard's
-    # keyed repartition is a no-op-cost exchange exactly when the scan
-    # was already parallel, and such tables don't occur in the fixture
-    # or any sane production layout (compaction targets < split size).
+    # lesson, ADVICE r10). inputFiles() lists the leaf files of ANY
+    # file-backed plan, shuffles included, so the probe only means
+    # "the scan undersplit" when the frame is scan-adjacent: callers
+    # pass a scan plus narrow per-row work, never a frame downstream of
+    # an exchange (whose width is already spark.sql.shuffle.partitions).
+    # Caveat vs the old probe: a single file BIGGER than
+    # maxPartitionBytes would split fine at scan yet still count as 1
+    # here — acceptable, because the guard's keyed repartition is a
+    # no-op-cost exchange exactly when the scan was already parallel,
+    # and such tables don't occur in the fixture or any sane production
+    # layout (compaction targets < split size).
     try:
         n_files = len(df.inputFiles())
     except Exception:  # non-file-backed plan (e.g. in-memory fixture)

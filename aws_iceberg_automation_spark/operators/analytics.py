@@ -1268,7 +1268,7 @@ def q209_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     per part (two-phase hash agg), then the descending cumulative
     revenue is computed WITHOUT a single-task global window: ONE
     partitioned_prefix_sums decomposition ordered by (negated revenue,
-    partkey) — quantile buckets, broadcast offsets, partitioned
+    partkey) — histogram buckets, literal offsets, partitioned
     cumulative windows. (The round-4 form chained global_row_number →
     prefix-sums-over-rk; the rank was only ever the ORDER, and the
     second decomposition's eager boundary collect re-executed the

@@ -134,7 +134,7 @@ def q279_weighted_pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the prefix sum runs through the bucket/offset
     decomposition (functions/ranking.partitioned_prefix_sums) — no
     single-partition window anywhere; the oracle's one global window is
-    DuckDB-side only. One boundary job + one partitioned window at any
+    DuckDB-side only. One histogram job + one partitioned window at any
     corpus size."""
     from ..functions.ranking import partitioned_prefix_sums
 
@@ -857,10 +857,9 @@ def q208_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: orders collapse to one row per customer via two-phase
     hash agg, then all three quintiles come from ONE multi-dimension
     windowless decomposition (functions/ranking.global_ntiles): a
-    single eager boundary job cuts quantile buckets for recency,
+    single eager histogram job cuts the buckets for recency,
     frequency and money together over the plain per-customer frame,
-    per-bucket counts/offsets all derive from that one pre-bucketed
-    exchange, and only the three PARTITIONED rank windows chain — one
+    per-bucket counts/offsets all derive from that one collect, and only the three PARTITIONED rank windows chain — one
     repartition per dimension, never a single-task global window and
     never a boundary job that re-executes a previous dimension's plan
     (the chained-global_ntile form measured 10.9 s warm / 74 shuffles;

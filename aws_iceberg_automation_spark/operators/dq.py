@@ -825,8 +825,8 @@ def q189_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: per-distinct-value counts are a two-phase hash agg;
     the exact ECDF runs through bucketed prefix sums
-    (functions/ranking.partitioned_prefix_sums: quantile buckets +
-    broadcast offsets + PARTITIONED cumulative windows — no
+    (functions/ranking.partitioned_prefix_sums: histogram buckets +
+    literal offsets + PARTITIONED cumulative windows — no
     single-partition stage at any cardinality). The reject flag
     compares ROUNDED values on both engines (no ulp coin-flips).
     """

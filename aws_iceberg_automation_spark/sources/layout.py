@@ -11,15 +11,15 @@ bounding box in ALL clustered dimensions, so selective filters on any
 of them skip most files.
 
 Per-column rank comes from APPROX-QUANTILE boundaries computed once in a
-single agg and broadcast back (equal-frequency buckets, so value skew
-cannot collapse the curve) — NOT from a ``percent_rank`` global window,
-which would funnel the whole table through one task. The broadcast
-boundary array is 2^bits-1 doubles per column (≤2 KB at the default 8
-bits); the per-row bucket lookup is a codegen'd filter+size over that
-array; the interleave is pure bit math. 8 bits/dim = 256 cells per
-dimension — orders of magnitude finer than any realistic file count, so
-pruning quality is indistinguishable from the exact-rank layout while
-every stage stays distributed.
+single eager agg, collected and inlined into the plan as CASE-sum
+literals (equal-frequency buckets, so value skew cannot collapse the
+curve) — NOT from a ``percent_rank`` global window, which would funnel
+the whole table through one task. The boundaries are 2^bits-1 doubles
+per column (255 at the default 8 bits); the per-row rank is a sum of
+literal comparisons; the interleave is pure bit math. 8 bits/dim = 256
+cells per dimension — orders of magnitude finer than any realistic file
+count, so pruning quality is indistinguishable from the exact-rank
+layout while every stage stays distributed.
 """
 
 from __future__ import annotations
@@ -28,8 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # bits per dimension; 256 equal-frequency cells/dim — file- and
-# row-group-level bounding boxes need far fewer, and the broadcast
-# boundary array + per-row scan stay trivially small
+# row-group-level bounding boxes need far fewer, and the 255 boundary
+# literals per column stay trivially small
 _BITS = 8
 
 
@@ -71,14 +71,35 @@ def _rankable(df: DataFrame, c: str) -> Column:
 
 def _boundary_ranks(df: DataFrame, cols: list[str], bits: int) -> DataFrame:
     """Tag ``df`` with ``_rank_<col>`` ∈ [0, 2^bits) per clustered
-    column via the shared quantile-bucket ranking (one broadcast
-    percentile_approx agg for ALL columns — monotone equal-frequency
-    buckets, no global window)."""
-    from ..functions.ranking import quantile_bucket_ranks
+    column: rank = #(approx-quantile boundaries <= value), every
+    column's boundaries from ONE percentile_approx agg (monotone
+    equal-frequency buckets, no global window).
 
-    return quantile_bucket_ranks(
-        df, [(_rankable(df, c), f"_rank_{c}") for c in cols], 1 << bits
-    )
+    Repeated boundaries are kept on purpose: a column with few distinct
+    values repeats each one across many quantiles, so its values still
+    spread over the whole 0..2^bits-1 rank range (15 user_ids land ~17
+    ranks apart, not on 0..14) and the curve keeps splitting files on
+    it. That is why z-order does not use the ranking decompositions'
+    exact histogram, which emits each cut once: there a 15-value
+    column ranks 0..14 and its double cells merge nearby string
+    surrogates into one cell."""
+    from ..functions.ranking import _bucket_literal_expr, _check_names
+
+    n = 1 << bits
+    qs = [i / n for i in range(1, n)]
+    ranks = [(_rankable(df, c), f"_rank_{c}") for c in cols]
+    bounds = df.agg(
+        *[F.percentile_approx(v, qs, 10_000).alias(name) for v, name in ranks]
+    ).collect()[0]
+    # The per-row rank reads a scratch copy of the rankable value, so the
+    # CASE-sum string can name it.
+    scratch = [f"_zval_{c}" for c in cols]
+    _check_names(df, *scratch)
+    out = df.select("*", *[v.alias(s) for (v, _), s in zip(ranks, scratch)])
+    for (_, name), s in zip(ranks, scratch):
+        # None: empty input frame
+        out = out.withColumn(name, _bucket_literal_expr(s, bounds[name] or []))
+    return out.drop(*scratch)
 
 
 def _interleave(rank_cols: list[Column], bits: int) -> Column:

@@ -579,7 +579,6 @@ def test_headline_set_aqe_final_shapes(spark):
     new shape is intended (better), update the pin; if a broadcast
     became SMJ or a shuffle appeared, that's the 100 TB regression
     this test exists to catch."""
-    import os
     import re
 
     from aws_iceberg_automation_spark.plans.explain import (
@@ -587,18 +586,6 @@ def test_headline_set_aqe_final_shapes(spark):
         final_plan_string,
     )
     from aws_iceberg_automation_spark.registry import all_specs
-
-    # The pins encode the DEFAULT-config shapes on the single-split
-    # local fixtures — undersplit-guard repartitions included (their
-    # exchange counts, and q171's guard-induced co-partitioned SMJ).
-    # Under the measurement kill-switches the guard never fires and
-    # the shapes legitimately differ (ADVICE r10): skip rather than
-    # redden an A/B session.
-    if os.environ.get("SPARK_GRAFT_REBALANCE_UNDERSPLIT") == "0" or (
-        os.environ.get("SPARK_GRAFT_SINGLEPASS_BUCKETS") == "0"
-    ):
-        pytest.skip("plan pins encode default-config shapes; a "
-                    "kill-switch is active")
 
     expected = {
         "q01_pricing_summary": ([], 6),  # +guard repartition (r10)

@@ -235,8 +235,8 @@ def test_int_cell_monotone_and_invertible(spark):
 
 def test_dbl_cell_monotone_and_invertible(spark):
     """Same exactness contract for the IEEE-bits double cell map,
-    including ±0.0, denormals, infinities and NaN (forced below every
-    real cell, matching the CASE-sum's bucket-0 treatment)."""
+    including ±0.0, denormals, infinities and NaN (forced above every
+    real cell, as Spark orders NaN above +inf)."""
     import math
     import random
     import struct
@@ -266,7 +266,7 @@ def test_dbl_cell_monotone_and_invertible(spark):
     # -0.0 and 0.0 share a cell
     zero_cells = {r.c for r in rows if r.v == 0.0}
     assert len(zero_cells) == 1
-    # NaN is forced to the below-everything marker
+    # NaN is forced to the above-everything marker
     nan_rows = _dbl_cells(spark, [float("nan")])
     assert nan_rows[0].c == _NAN_CELL
     # inverse: threshold at or below every member, same cell
@@ -281,75 +281,172 @@ def test_dbl_cell_monotone_and_invertible(spark):
         assert trows[t] == c
 
 
-@pytest.mark.parametrize("dt", ["bigint", "int", "double", "float"])
-def test_single_pass_matches_legacy_two_job_path(spark, dt, monkeypatch):
-    """The r11 single-histogram-job bucketization must produce
-    IDENTICAL ranks/tiles/prefix sums to the r10 percentile_approx +
-    count-agg path (kill-switch A/B) — adversarial ties, spikes and
-    negatives included."""
-    from aws_iceberg_automation_spark.functions.ranking import global_ntiles
+def _typed(v, dt: str):
+    """An integer-valued Column as ``dt``; a date is that many days from
+    2000-01-01, so the integer order carries over."""
+    if dt == "date":
+        return F.date_add(F.to_date(F.lit("2000-01-01")), v.cast("int"))
+    return v.cast(dt)
+
+
+@pytest.mark.parametrize("dt", ["bigint", "int", "double", "float", "date"])
+def test_decompositions_match_window_oracles(spark, dt):
+    """All five decompositions equal their single-partition window
+    oracles on adversarial ties, a spike and a negative tail, for every
+    value type the histogram cells: integers, floating point and dates
+    (through unix_date)."""
+    from aws_iceberg_automation_spark.functions.ranking import (
+        global_ntiles,
+        grouped_row_number,
+    )
 
     base = spark.range(700).select(
         F.col("id"),
-        F.when(F.col("id") < 500, (F.col("id") % 7))
-        .when(F.col("id") < 600, F.lit(3))
-        .otherwise(-F.col("id"))
-        .cast(dt)
-        .alias("v"),
+        _typed(
+            F.when(F.col("id") < 500, F.col("id") % 7)
+            .when(F.col("id") < 600, F.lit(3))
+            .otherwise(-F.col("id")),
+            dt,
+        ).alias("v"),
         (F.col("id") % 13).cast("bigint").alias("m"),
     )
-
-    def run_all():
-        rn = global_row_number(base, F.col("v"), [F.col("id")], n_buckets=8)
-        nt = global_ntile(base, F.col("v"), [F.col("id")], 5, n_buckets=8)
-        ps = partitioned_prefix_sums(
-            base, F.col("v"), ["m"], n_buckets=8, tiebreaks=[F.col("id")]
+    grouped = base.withColumn("g", F.col("m") % 3)
+    w = Window.orderBy("v", "id")
+    wm = Window.orderBy("m", "id")
+    cases = [
+        (
+            global_row_number(base, F.col("v"), [F.col("id")], n_buckets=8),
+            base.withColumn("rk", F.row_number().over(w).cast("bigint")),
+        ),
+        (
+            global_ntile(base, F.col("v"), [F.col("id")], 5, n_buckets=8),
+            base.withColumn("bucket", F.ntile(5).over(w)),
+        ),
+        (
+            global_ntiles(
+                base,
+                [(F.col("v"), "t_v"), (F.col("m"), "t_m")],
+                [F.col("id")],
+                4,
+                n_buckets=8,
+            ),
+            base.withColumn("t_v", F.ntile(4).over(w)).withColumn(
+                "t_m", F.ntile(4).over(wm)
+            ),
+        ),
+        (
+            partitioned_prefix_sums(
+                base, F.col("v"), ["m"], n_buckets=8, tiebreaks=[F.col("id")]
+            ),
+            base.withColumn(
+                "cum_m",
+                F.sum("m")
+                .over(w.rowsBetween(Window.unboundedPreceding, 0))
+                .cast("bigint"),
+            ),
+        ),
+        (
+            grouped_row_number(
+                grouped, ["g"], F.col("v"), [F.col("id")], n_buckets=8
+            ),
+            grouped.withColumn(
+                "rk",
+                F.row_number()
+                .over(Window.partitionBy("g").orderBy("v", "id"))
+                .cast("bigint"),
+            ),
+        ),
+    ]
+    for got, want in cases:
+        cols = want.columns
+        assert sorted(map(tuple, got.select(*cols).collect())) == sorted(
+            map(tuple, want.collect())
         )
-        return (
-            sorted(map(tuple, rn.collect())),
-            sorted(map(tuple, nt.collect())),
-            sorted(map(tuple, ps.collect())),
-        )
-
-    monkeypatch.setenv("SPARK_GRAFT_SINGLEPASS_BUCKETS", "0")
-    legacy = run_all()
-    monkeypatch.setenv("SPARK_GRAFT_SINGLEPASS_BUCKETS", "1")
-    single = run_all()
-    assert legacy == single
 
 
-def test_single_pass_runs_one_eager_job(spark, monkeypatch):
-    """The merged path must launch exactly ONE eager job at plan-build
-    time (the histogram collect) where the legacy path launched two —
-    the jobs-count claim of VERDICT r10 ask #3, pinned."""
-    base = spark.range(1000).select(
-        F.col("id"), (F.col("id") % 97).cast("bigint").alias("v")
+def _sql_executions(spark, build) -> int:
+    """SQL executions that ``build()`` starts: the difference of the
+    newest execution id in the SQL status store (listed in id order)
+    once the listener bus has drained. Not the store's size: it keeps
+    only the newest spark.sql.ui.retainedExecutions, so in a long
+    session its size stops growing. Not Spark jobs either: one collect
+    runs two jobs under AQE."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def newest_id() -> int:
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return execs.last().executionId() if execs.nonEmpty() else -1
+
+    before = newest_id()
+    build()
+    return newest_id() - before
+
+
+def test_single_pass_runs_one_eager_job(spark):
+    """Building any of the five decompositions runs exactly ONE SQL
+    execution before the main query: the histogram collect. A date
+    value takes the same integer-cell path."""
+    from aws_iceberg_automation_spark.functions.ranking import (
+        global_ntiles,
+        grouped_row_number,
     )
-    tracker = spark.sparkContext.statusTracker()
 
-    def jobs_during_build(env):
-        # monkeypatch restores any externally set value after the test
-        monkeypatch.setenv("SPARK_GRAFT_SINGLEPASS_BUCKETS", env)
-        before = tracker.getJobIdsForGroup(None)
-        hi = max(before) if before else -1
-        global_row_number(base, F.col("v"), [F.col("id")], n_buckets=8)
-        after = tracker.getJobIdsForGroup(None)
-        return len([j for j in after if j > hi])
+    got, want = {}, {}
+    for dt in ("bigint", "date"):
+        base = spark.range(1000).select(
+            F.col("id"),
+            _typed(F.col("id") % 97, dt).alias("v"),
+            (F.col("id") % 5).alias("m"),
+        )
+        v, tb = F.col("v"), [F.col("id")]
+        builds = {
+            "global_row_number": lambda: global_row_number(base, v, tb),
+            "global_ntile": lambda: global_ntile(base, v, tb, 4),
+            "global_ntiles": lambda: global_ntiles(
+                base, [(v, "t_v"), (F.col("m"), "t_m")], tb, 4
+            ),
+            "partitioned_prefix_sums": lambda: partitioned_prefix_sums(
+                base, v, ["m"], tiebreaks=tb
+            ),
+            "grouped_row_number": lambda: grouped_row_number(
+                base, ["m"], v, tb
+            ),
+        }
+        for name, build in builds.items():
+            got[dt, name] = _sql_executions(spark, build)
+            want[dt, name] = 1
+    assert got == want
 
-    assert jobs_during_build("1") < jobs_during_build("0")
+
+def test_unsupported_value_type_fails_before_any_job(spark):
+    """A value type outside the histogram's cells (here DECIMAL) raises
+    TypeError while the plan is built, having run nothing."""
+    base = spark.range(100).select(
+        F.col("id"), F.col("id").cast("decimal(10,2)").alias("v")
+    )
+
+    def build():
+        with pytest.raises(TypeError, match="decimal"):
+            global_row_number(base, F.col("v"), [F.col("id")])
+
+    assert _sql_executions(spark, build) == 0
 
 
-@pytest.mark.parametrize("dt", ["bigint", "double"])
+@pytest.mark.parametrize("dt", ["bigint", "double", "date"])
 def test_single_pass_nullable_rank_column(spark, dt):
     """A nullable rank column takes the single-pass histogram path for
-    both kinds: NULL lands in bucket 0 (first, as in an ascending
+    every kind: NULL lands in bucket 0 (first, as in an ascending
     window) instead of aborting the histogram job."""
     base = spark.range(300).select(
         F.col("id"),
-        F.when(F.col("id") % 9 == 0, F.lit(None))
-        .otherwise((F.col("id") % 17) - 5)
-        .cast(dt)
-        .alias("v"),
+        _typed(
+            F.when(F.col("id") % 9 == 0, F.lit(None)).otherwise(
+                (F.col("id") % 17) - 5
+            ),
+            dt,
+        ).alias("v"),
     )
     rn = global_row_number(base, F.col("v"), [F.col("id")], n_buckets=8)
     nt = global_ntile(base, F.col("v"), [F.col("id")], 5, n_buckets=8)
@@ -361,4 +458,29 @@ def test_single_pass_nullable_rank_column(spark, dt):
     )
     assert sorted(map(tuple, nt.select("id", "bucket").collect())) == sorted(
         map(tuple, want_nt.select("id", "bucket").collect())
+    )
+
+
+def test_nan_ranks_last_as_in_spark_window(spark):
+    """Spark orders NaN above +inf. The histogram must count NaN in the
+    same (last) bucket the main plan's CASE-sum puts it in, or the
+    offsets of every bucket after it are off by the NaN count."""
+    base = spark.range(200).select(
+        F.col("id"),
+        F.when(F.col("id") % 7 == 0, F.lit(float("nan")))
+        .when(F.col("id") % 11 == 0, F.lit(None))
+        .when(F.col("id") % 13 == 0, F.lit(float("inf")))
+        .otherwise((F.col("id") % 23).cast("double"))
+        .alias("v"),
+    )
+    rn = global_row_number(base, F.col("v"), [F.col("id")], n_buckets=8)
+    nt = global_ntile(base, F.col("v"), [F.col("id")], 6, n_buckets=8)
+    w = Window.orderBy("v", "id")
+    want_rn = base.withColumn("rk", F.row_number().over(w).cast("bigint"))
+    want_nt = base.withColumn("bucket", F.ntile(6).over(w))
+    assert sorted(rn.select("id", "rk").collect()) == sorted(
+        want_rn.select("id", "rk").collect()
+    )
+    assert sorted(nt.select("id", "bucket").collect()) == sorted(
+        want_nt.select("id", "bucket").collect()
     )
