@@ -837,7 +837,7 @@ FROM main m JOIN br b ON b.l_returnflag = m.l_returnflag
 def q329_branch_divergence_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Branch DIVERGENCE summary (the code-review view of Iceberg
     branching: what would merging `dev` change?): stage a batch on a
-    branch with ``write_to_branch``, then report per return flag how
+    branch with ``write(..., branch="dev")``, then report per return flag how
     far the branch has diverged from main — main rows, branch rows,
     branch-only delta — while MAIN remains byte-identical (asserted
     in-query: the staging write must not move the main head). The
@@ -856,7 +856,7 @@ def q329_branch_divergence_summary(spark: SparkSession, sf_dir: str) -> DataFram
     vt.write(li.filter(m == 0), "append")
     head_before = vt.current_version()
     vt.create_branch("dev")
-    vt.write_to_branch(li.filter(m == 3), "dev", mode="append")
+    vt.write(li.filter(m == 3), "append", branch="dev")
     if vt.current_version() != head_before:
         raise VersioningError("branch staging moved the main head")
     main_agg = vt.read().groupBy("l_returnflag").agg(
@@ -1453,27 +1453,27 @@ def q409_branch_merge_3way(spark: SparkSession, sf_dir: str) -> DataFrame:
     vt.create_branch("reprice")
     vt.create_branch("doomed")
     # branch edit: +10% on keys %5=1
-    vt.write_to_branch(
+    vt.write(
         base.withColumn(
             "cents",
             F.when(
                 F.col("k") % 5 == 1, F.round(F.col("cents") * 1.1).cast("bigint")
             ).otherwise(F.col("cents")),
         ),
-        "reprice",
-        mode="overwrite",
+        "overwrite",
+        branch="reprice",
     )
     # main edits: delete %5=2, append %5=4
     vt.delete_where("k % 5 = 2")
     vt.write(o.filter(F.col("k") % 5 == 4))
     # conflicting branch: edits the keys main deleted
-    vt.write_to_branch(
+    vt.write(
         base.withColumn(
             "cents",
             F.when(F.col("k") % 5 == 2, F.lit(1)).otherwise(F.col("cents")),
         ),
-        "doomed",
-        mode="overwrite",
+        "overwrite",
+        branch="doomed",
     )
     try:
         vt.merge_branch("doomed", on=["k"])
@@ -1718,7 +1718,7 @@ def q430_branch_merge_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c",
         F.when(F.col("k") % 3 == 0, F.col("c") + 1000).otherwise(F.col("c")),
     )
-    vt.write_to_branch(branch_state, "fix", mode="overwrite")
+    vt.write(branch_state, "overwrite", branch="fix")
     main_state = base.withColumn(
         "c",
         F.when(F.col("k") % 2 == 0, F.col("c") * 2).otherwise(F.col("c")),
@@ -1816,7 +1816,7 @@ def q431_branch_alter_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("bronze"))
         .alias("tier"),
     )
-    vt.write_to_branch(b, "evo")
+    vt.write(b, branch="evo")
     c = cust.filter(F.col("c_custkey") % 4 == 2).select(
         "c_custkey", "c_nationkey", cents.alias("cents")
     )

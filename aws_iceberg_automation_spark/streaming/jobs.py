@@ -361,7 +361,9 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-STREAM_STATE_PARTITIONS_ENV = "SPARK_GRAFT_STREAM_STATE_PARTITIONS"
+# Stateful-shuffle width of every stream: 8 store instances per
+# stateful operator, sized to the replay fixtures' KB-scale state.
+STREAM_STATE_PARTITIONS = 8
 
 
 @contextlib.contextmanager
@@ -376,26 +378,19 @@ def _stream_state_partitions(spark: SparkSession):
     never coalesces stateful exchanges — so inheriting the session's
     batch width silently turns "more cores" into "more per-batch state
     commits". Production sizes it to expected state volume/throughput
-    (Spark's own guidance) and so does this helper: the deployment
-    sets $SPARK_GRAFT_STREAM_STATE_PARTITIONS to its capacity number
-    ("0" = inherit the session conf, the measurement kill-switch); the
-    default 8 matches the replay fixtures' KB-scale state. Measured on
-    q122's stream-stream join at sf0.01 (5-microbatch replay,
-    local[32]): 32 partitions = 128 store instances whose local-FS
-    delta commits CONTEND — commitTimeMs 58 s summed, 16-21 s wall —
-    vs 8 partitions = 32 instances, 1.9 s commit, 4.7 s wall; 4 and 2
-    partitions give only 0.4-0.7 s more. The conf is restored after
-    the query terminates, so batch plans in the same session keep the
-    session's width (the hostile sweeps' overrides stay in force for
-    everything except stream execution, which a real deployment pins
-    per-stream anyway)."""
-    n = os.environ.get(STREAM_STATE_PARTITIONS_ENV, "8")
-    if n == "0":
-        yield
-        return
+    (Spark's own guidance); here it is ``STREAM_STATE_PARTITIONS``.
+    Measured on q122's stream-stream join at sf0.01 (5-microbatch
+    replay, local[32]): 32 partitions = 128 store instances whose
+    local-FS delta commits CONTEND — commitTimeMs 58 s summed, 16-21 s
+    wall — vs 8 partitions = 32 instances, 1.9 s commit, 4.7 s wall; 4
+    and 2 partitions give only 0.4-0.7 s more. The conf is restored
+    after the query terminates, so batch plans in the same session keep
+    the session's width (the hostile sweeps' overrides stay in force
+    for everything except stream execution, which a real deployment
+    pins per-stream anyway)."""
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
-    spark.conf.set(key, n)
+    spark.conf.set(key, str(STREAM_STATE_PARTITIONS))
     try:
         yield
     finally:

@@ -36,7 +36,7 @@ import json
 import os
 import re
 import urllib.parse
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from datetime import datetime, timezone
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -66,6 +66,16 @@ def _local_path(uri: str) -> str:
 
 @dataclass
 class Snapshot:
+    """One committed version's manifest. Every snapshot is its parent
+    plus the fields its commit changes (``VersionedTable._commit``, on
+    main or on a branch): ``version``, ``parent``, ``ts`` and ``op`` are
+    always the commit's own, ``renames`` is empty unless the commit
+    renamed, and every other field is carried from the parent unless
+    the commit names it. So declared schema, rename/type history and
+    equality deletes survive data commits, and an ALTER keeps the
+    parent's files and bounds. A manifest is read back the same way,
+    as the empty table plus the fields it records."""
+
     version: int
     parent: int | None
     ts: str  # ISO-8601 UTC commit time
@@ -103,6 +113,26 @@ class Snapshot:
     # the widen era (the replay applies renames and widens in one
     # era-ordered pass, so names always line up).
     type_log: list = field(default_factory=list)
+
+
+# The table before its first commit: the parent of that commit, and the
+# defaults a manifest written before a field existed decodes with.
+_EMPTY_TABLE = Snapshot(version=0, parent=None, ts="", op="", files=[])
+
+
+def _schema_of(df: DataFrame) -> list:
+    """A frame's columns in the manifest's [[name, type], ...] form."""
+    return [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
+
+
+def _adds_rows_only(parent: Snapshot, snap: Snapshot) -> bool:
+    """True when commit ``snap`` only adds rows to ``parent``: it drops
+    none of the parent's files and adds no equality delete. Appends
+    (batch, streaming, branch) and ALTERs qualify; overwrites, merges,
+    deletes and compactions do not. Incremental reads rest on this."""
+    return set(parent.files) <= set(snap.files) and (
+        snap.eq_deletes == parent.eq_deletes
+    )
 
 
 # JSON-representable bound types we collect and compare. Everything else
@@ -301,7 +331,7 @@ class VersionedTable:
     def snapshot(self, version: int) -> Snapshot:
         try:
             with open(self._manifest_path(version)) as f:
-                return Snapshot(**json.load(f))
+                return replace(_EMPTY_TABLE, **json.load(f))
         except FileNotFoundError:
             raise VersioningError(
                 f"no snapshot v{version} in {self.root} "
@@ -310,12 +340,34 @@ class VersionedTable:
 
     def snapshots(self) -> list[Snapshot]:
         """The snapshot log (Iceberg's ``<table>.snapshots`` analog)."""
-        out = []
-        for name in sorted(os.listdir(self._meta)):
-            if name.startswith("v") and name.endswith(".json"):
-                with open(os.path.join(self._meta, name)) as f:
-                    out.append(Snapshot(**json.load(f)))
-        return sorted(out, key=lambda s: s.version)
+        return sorted(
+            (
+                self.snapshot(int(name[1:-5]))
+                for name in os.listdir(self._meta)
+                if name.startswith("v") and name.endswith(".json")
+            ),
+            key=lambda s: s.version,
+        )
+
+    def _resolve_version(
+        self, version: int | None = None, as_of_timestamp: str | None = None
+    ) -> int:
+        """VERSION AS OF, TIMESTAMP AS OF (ISO-8601: the latest snapshot
+        committed at-or-before), or CURRENT when neither is given."""
+        if version is not None and as_of_timestamp is not None:
+            raise VersioningError("pass version OR as_of_timestamp, not both")
+        if as_of_timestamp is not None:
+            eligible = [s for s in self.snapshots() if s.ts <= as_of_timestamp]
+            if not eligible:
+                raise VersioningError(
+                    f"no snapshot at or before {as_of_timestamp!r}"
+                )
+            return eligible[-1].version
+        if version is None:
+            version = self.current_version()
+            if version is None:
+                raise VersioningError(f"empty versioned table at {self.root}")
+        return version
 
     def _next_version(self) -> int:
         """Monotonic across rollback branches (Iceberg snapshot-id
@@ -324,32 +376,36 @@ class VersionedTable:
         versions = [s.version for s in self.snapshots()]
         return (max(versions) if versions else 0) + 1
 
+    def _head(self, branch: str | None = None) -> Snapshot | None:
+        """The snapshot a commit builds on: CURRENT on main, the branch
+        head with ``branch=``; None before an empty table's first
+        commit."""
+        if branch is None:
+            v = self.current_version()
+        else:
+            v = self._branch_refs(branch)[branch]["version"]
+        return None if v is None else self.snapshot(v)
+
     def _commit(
         self,
-        files: list[str],
-        op: str,
-        parent: int | None,
+        parent: Snapshot | None,
         version: int,
-        stats: dict[str, dict[str, list]] | None = None,
-        renames: dict[str, str] | None = None,
-        rename_log: list | None = None,
-        schema: list | None = None,
-        eq_deletes: list | None = None,
-        type_log: list | None = None,
-        move_current: bool = True,
+        op: str,
+        branch: str | None = None,
+        **changed,
     ) -> int:
-        manifest = Snapshot(
-            version=version,
-            parent=parent,
-            ts=datetime.now(timezone.utc).isoformat(),
-            op=op,
-            files=sorted(files),
-            stats=stats or {},
-            renames=renames or {},
-            rename_log=rename_log or [],
-            schema=schema,
-            eq_deletes=eq_deletes or [],
-            type_log=type_log or [],
+        """Write snapshot ``version`` as ``parent`` plus the ``changed``
+        fields, then move CURRENT, or the ``branch`` ref."""
+        manifest = replace(
+            parent or _EMPTY_TABLE,
+            **{
+                "version": version,
+                "parent": None if parent is None else parent.version,
+                "ts": datetime.now(timezone.utc).isoformat(),
+                "op": op,
+                "renames": {},
+                **changed,
+            },
         )
         path = self._manifest_path(version)
         if os.path.exists(path):
@@ -359,12 +415,21 @@ class VersionedTable:
             )
         with open(path, "w") as f:
             json.dump(manifest.__dict__, f)
-        if move_current:
-            tmp = os.path.join(self._meta, "CURRENT.tmp")
-            with open(tmp, "w") as f:
-                f.write(str(version))
-            os.replace(tmp, os.path.join(self._meta, "CURRENT"))
+        self._move(branch, version)
         return version
+
+    def _move(self, branch: str | None, version: int) -> None:
+        """Point CURRENT (``branch=None``) or a branch ref at
+        ``version``. CURRENT moves by tmp-write + rename."""
+        if branch is not None:
+            refs = self.refs()
+            refs[branch]["version"] = version
+            self._write_refs(refs)
+            return
+        tmp = os.path.join(self._meta, "CURRENT.tmp")
+        with open(tmp, "w") as f:
+            f.write(str(version))
+        os.replace(tmp, os.path.join(self._meta, "CURRENT"))
 
     # -- write (#17/#18 with history) ----------------------------------
 
@@ -373,6 +438,7 @@ class VersionedTable:
         df: DataFrame,
         mode: str = "append",
         partition_by: list[str] | None = None,
+        branch: str | None = None,
         _op: str | None = None,
     ) -> int:
         """Commit df as a new snapshot; returns the new version.
@@ -388,10 +454,15 @@ class VersionedTable:
         by construction. Partition specs are PER SNAPSHOT (Iceberg's
         partition-spec evolution): later commits may partition
         differently or not at all; readers stitch mixed layouts back
-        together transparently (see ``_read_files``)."""
+        together transparently (see ``_read_files``).
+
+        ``branch=`` commits onto that branch's head and moves only its
+        ref (op ``branch-<mode>``) — the staging half of
+        write-audit-publish: CURRENT is untouched, so main readers keep
+        snapshot isolation from in-audit data."""
         if mode not in ("append", "overwrite"):
             raise VersioningError(f"mode must be append/overwrite, got {mode!r}")
-        parent = self.current_version()
+        parent = self._head(branch)
         new_version = self._next_version()
         data_dir = os.path.join(self.root, "data", f"v{new_version}")
         writer = df.write.mode("errorifexists")
@@ -413,48 +484,29 @@ class VersionedTable:
         if partition_by:
             for f in files:
                 stats.setdefault(f, {}).update(_partition_bounds_from_path(f))
-        schema = None
-        rename_log: list = []
-        eq_deletes: list = []
-        type_log: list = []
-        if parent is not None:
-            parent_snap = self.snapshot(parent)
-            # declared schema + rename/type history survive data
-            # commits (ALTER is the only op that changes them —
-            # Iceberg semantics)
-            schema = parent_snap.schema
-            rename_log = parent_snap.rename_log
-            type_log = parent_snap.type_log
-            if mode == "overwrite" and schema is not None:
-                # an overwrite replaces the visible file set wholesale,
-                # so the declared schema must describe the NEW frame —
-                # a merge commit may legitimately carry branch-side
-                # names/types reconciled past the parent's declaration
-                schema = [
-                    [f.name, f.dataType.simpleString()]
-                    for f in df.schema.fields
-                ]
-            if mode == "append":
-                files += parent_snap.files
-                # carried files keep their already-collected bounds
-                stats.update(parent_snap.stats)
-                # equality deletes keep applying to the files they
-                # covered; the new files post-date them (higher era) so
-                # the read path never filters them — sequence semantics
-                eq_deletes = parent_snap.eq_deletes
-            # overwrite replaces the visible file set, so any pending
-            # equality deletes have nothing left to apply to
-        return self._commit(
-            files,
-            _op or mode,
-            parent,
-            new_version,
-            stats,
-            rename_log=rename_log,
-            schema=schema,
-            eq_deletes=eq_deletes,
-            type_log=type_log,
-        )
+        if mode == "append" and parent is not None:
+            # carried files keep their already-collected bounds and the
+            # equality deletes that cover them; the new files post-date
+            # those deletes (higher era), so reads never filter them
+            changed = {
+                "files": sorted(files + parent.files),
+                "stats": {**stats, **parent.stats},
+            }
+        else:
+            # an overwrite replaces the visible file set, so pending
+            # equality deletes have nothing left to apply to, and a
+            # declared schema must describe the NEW frame — a merge
+            # commit may carry branch-side names/types reconciled past
+            # the parent's declaration
+            declared = parent is not None and parent.schema is not None
+            changed = {
+                "files": sorted(files),
+                "stats": stats,
+                "eq_deletes": [],
+                "schema": _schema_of(df) if declared else None,
+            }
+        op = _op or (mode if branch is None else f"branch-{mode}")
+        return self._commit(parent, new_version, op, branch, **changed)
 
     def _read_files(self, files: list[str]) -> DataFrame:
         """Read an explicit file list, reconstructing hive partition
@@ -608,26 +660,8 @@ class VersionedTable:
         ``branch=`` commits the ALTER onto a branch head (moving only
         the branch ref), so staged write-audit-publish work can evolve
         its schema before publish/merge."""
-        refs = None
-        if branch is not None:
-            refs = self.refs()
-            if branch not in refs or refs[branch]["type"] != "branch":
-                raise VersioningError(
-                    f"no branch {branch!r} — create_branch first (refs: {refs})"
-                )
-            parent = refs[branch]["version"]
-        else:
-            parent = self.current_version()
-        if parent is None:
-            raise VersioningError("cannot ALTER an empty table")
-        snap = self.snapshot(parent)
-        if snap.schema is not None:
-            schema = [list(c) for c in snap.schema]
-        else:
-            schema = [
-                [f.name, f.dataType.simpleString()]
-                for f in self.read(version=parent).schema.fields
-            ]
+        parent = self._head(branch)
+        schema = self._declared_schema(parent)
         names = [c[0] for c in schema]
         renames = dict(renames or {})
         for old, new in renames.items():
@@ -659,30 +693,27 @@ class VersionedTable:
         # BEFORE the drop tombstones (rename a→b then drop b tombstones
         # b); sorted() is stable on equal eras, so list order rules
         rename_log = [
-            *snap.rename_log,
+            *parent.rename_log,
             *[[new_version, old, new] for old, new in renames.items()],
             *[
                 [new_version, d, f"__dropped_v{new_version}__{d}"]
                 for d in (drops or [])
             ],
         ]
-        v = self._commit(
-            snap.files,
-            "alter",
-            parent,
-            new_version,
-            snap.stats,
-            renames=renames,
-            rename_log=rename_log,
-            schema=schema,
-            eq_deletes=snap.eq_deletes,
-            type_log=snap.type_log,
-            move_current=branch is None,
+        return self._commit(
+            parent, new_version, "alter", branch,
+            renames=renames, rename_log=rename_log, schema=schema,
         )
-        if branch is not None:
-            refs[branch]["version"] = v
-            self._write_refs(refs)
-        return v
+
+    def _declared_schema(self, snap: Snapshot | None) -> list:
+        """The [[name, type], ...] columns an ALTER starts from: the
+        schema ``snap`` declares, or its data's schema before any ALTER
+        declared one."""
+        if snap is None:
+            raise VersioningError("cannot ALTER an empty table")
+        if snap.schema is not None:
+            return [list(c) for c in snap.schema]
+        return _schema_of(self._assemble(snap))
 
     # Iceberg v2 legal type promotions (widen-only — narrowing would
     # corrupt existing data files' values at read).
@@ -704,26 +735,8 @@ class VersionedTable:
         the column's own narrower type. Illegal promotions (narrowing,
         cross-family, decimal scale changes) raise before committing
         anything."""
-        refs = None
-        if branch is not None:
-            refs = self.refs()
-            if branch not in refs or refs[branch]["type"] != "branch":
-                raise VersioningError(
-                    f"no branch {branch!r} — create_branch first (refs: {refs})"
-                )
-            parent = refs[branch]["version"]
-        else:
-            parent = self.current_version()
-        if parent is None:
-            raise VersioningError("cannot ALTER an empty table")
-        snap = self.snapshot(parent)
-        if snap.schema is not None:
-            schema = [list(c) for c in snap.schema]
-        else:
-            schema = [
-                [f.name, f.dataType.simpleString()]
-                for f in self.read(version=parent).schema.fields
-            ]
+        parent = self._head(branch)
+        schema = self._declared_schema(parent)
         by_name = {n: t for n, t in schema}
         for col, to in changes.items():
             if col not in by_name:
@@ -747,28 +760,14 @@ class VersionedTable:
                     "decimal(p,s)→decimal(p'≥p,s))"
                 )
         new_version = self._next_version()
-        new_schema = [
-            [n, changes.get(n, t) if n in changes else t] for n, t in schema
-        ]
-        v = self._commit(
-            snap.files,
-            "alter-type",
-            parent,
-            new_version,
-            snap.stats,
-            rename_log=snap.rename_log,
-            schema=new_schema,
-            eq_deletes=snap.eq_deletes,
+        return self._commit(
+            parent, new_version, "alter-type", branch,
+            schema=[[n, changes.get(n, t)] for n, t in schema],
             type_log=[
-                *snap.type_log,
+                *parent.type_log,
                 *[[new_version, c, t] for c, t in changes.items()],
             ],
-            move_current=branch is None,
         )
-        if branch is not None:
-            refs[branch]["version"] = v
-            self._write_refs(refs)
-        return v
 
     def delete_where_eq(self, predicate: str, keys: list[str]) -> int:
         """MERGE-ON-READ delete (Iceberg v2 equality-delete files): the
@@ -780,11 +779,10 @@ class VersionedTable:
         ``delete_where`` (copy-on-write), which pays the rewrite at
         commit time to keep reads join-free; ``compact_eq_deletes``
         converts accumulated MOR debt into that clean layout."""
-        parent = self.current_version()
+        parent = self._head()
         if parent is None:
             raise VersioningError(f"empty versioned table at {self.root}")
-        snap = self.snapshot(parent)
-        cur = self.read(version=parent)
+        cur = self._assemble(parent)
         missing = [k for k in keys if k not in cur.columns]
         if missing:
             raise VersioningError(f"delete keys not in schema: {missing}")
@@ -798,15 +796,8 @@ class VersionedTable:
         ]
         entry = {"files": dfiles, "keys": list(keys), "era": new_version}
         return self._commit(
-            snap.files,
-            "delete-eq",
-            parent,
-            new_version,
-            snap.stats,
-            rename_log=snap.rename_log,
-            schema=snap.schema,
-            eq_deletes=[*snap.eq_deletes, entry],
-            type_log=snap.type_log,
+            parent, new_version, "delete-eq",
+            eq_deletes=[*parent.eq_deletes, entry],
         )
 
     def compact_eq_deletes(self) -> int:
@@ -816,13 +807,11 @@ class VersionedTable:
         anti-join-free and the new snapshot carries zero delete files.
         MUST NOT change what any read returns — the q380 differential
         and the state-machine fuzz pin that."""
-        cur = self.current_version()
-        if cur is None:
-            raise VersioningError(f"empty versioned table at {self.root}")
-        if not self.snapshot(cur).eq_deletes:
+        snap = self.snapshot(self._resolve_version())
+        if not snap.eq_deletes:
             raise VersioningError("no equality-delete files to compact")
         return self.write(
-            self.read(version=cur), mode="overwrite", _op="rewrite-deletes"
+            self._assemble(snap), mode="overwrite", _op="rewrite-deletes"
         )
 
     # -- read (#13/#15) ------------------------------------------------
@@ -835,19 +824,7 @@ class VersionedTable:
         """Snapshot-isolated scan. ``version`` = VERSION AS OF;
         ``as_of_timestamp`` (ISO-8601) = TIMESTAMP AS OF (latest
         snapshot committed at-or-before); neither = CURRENT."""
-        if version is not None and as_of_timestamp is not None:
-            raise VersioningError("pass version OR as_of_timestamp, not both")
-        if as_of_timestamp is not None:
-            eligible = [s for s in self.snapshots() if s.ts <= as_of_timestamp]
-            if not eligible:
-                raise VersioningError(
-                    f"no snapshot at or before {as_of_timestamp!r}"
-                )
-            version = eligible[-1].version
-        if version is None:
-            version = self.current_version()
-            if version is None:
-                raise VersioningError(f"empty versioned table at {self.root}")
+        version = self._resolve_version(version, as_of_timestamp)
         return self._assemble(self.snapshot(version))
 
     def scan(
@@ -871,17 +848,7 @@ class VersionedTable:
         transforms bound *directories*, these bounds prune *files*
         inside them (and the sorted/Z-ordered layouts in
         sources.layout exist to make the bounds tight)."""
-        if version is not None and as_of_timestamp is not None:
-            raise VersioningError("pass version OR as_of_timestamp, not both")
-        if as_of_timestamp is not None:
-            eligible = [s for s in self.snapshots() if s.ts <= as_of_timestamp]
-            if not eligible:
-                raise VersioningError(f"no snapshot at or before {as_of_timestamp!r}")
-            version = eligible[-1].version
-        if version is None:
-            version = self.current_version()
-            if version is None:
-                raise VersioningError(f"empty versioned table at {self.root}")
+        version = self._resolve_version(version, as_of_timestamp)
         residual = _filters_to_column(filters)
         kept = self.plan_files(filters, version)
         if not kept:
@@ -902,10 +869,7 @@ class VersionedTable:
         instead of re-implementing a subset of it (round-6 review
         finding). Compare ``len(plan_files(filters))`` against
         ``len(snapshot(v).files)`` for the pruning ratio."""
-        if version is None:
-            version = self.current_version()
-            if version is None:
-                raise VersioningError(f"empty versioned table at {self.root}")
+        version = self._resolve_version(version)
         snap = self.snapshot(version)
         bloom = self._load_bloom(version)
         return [
@@ -952,11 +916,8 @@ class VersionedTable:
         decisions."""
         import pyarrow.parquet as pq
 
-        v = version if version is not None else self.current_version()
-        if v is None:
-            raise VersioningError(f"empty versioned table at {self.root}")
         rows = []
-        for f in self.snapshot(v).files:
+        for f in self.snapshot(self._resolve_version(version)).files:
             local = _local_path(f)
             try:
                 md = pq.ParquetFile(local).metadata
@@ -1032,9 +993,7 @@ class VersionedTable:
         sets bounded at n_bits; only the final files×cols bitmap rows
         reach the driver. Keys should be int/string id columns —
         canonical string rendering is the hash input."""
-        v = version if version is not None else self.current_version()
-        if v is None:
-            raise VersioningError(f"empty versioned table at {self.root}")
+        v = self._resolve_version(version)
         snap = self.snapshot(v)
         # NOTE: bloom sidecars index PHYSICAL column names on the raw
         # file scan (input_file_name must map 1:1 to the file being
@@ -1148,64 +1107,69 @@ class VersionedTable:
         turns a 100 TB corpus refresh into "process the new files",
         never a full re-read.
 
-        Only append commits are representable as a pure file-set diff;
-        if any commit in the window rewrote visible data (overwrite /
-        merge / delete / compact), this fails loudly — downstream
-        incremental consumers would otherwise silently double- or
-        under-count. (Iceberg's incremental scan has the same
+        Only commits that add rows (``_adds_rows_only``: appends of any
+        kind and ALTERs) are representable as a pure file-set diff; if
+        any commit in the window rewrote visible data (overwrite /
+        merge / delete / equality delete / compact), this fails loudly
+        — downstream incremental consumers would otherwise silently
+        double- or under-count. (Iceberg's incremental scan has the same
         append-only restriction.)"""
-        if to_version is None:
-            to_version = self.current_version()
-            if to_version is None:
-                raise VersioningError(f"empty versioned table at {self.root}")
+        base, lineage = self._window(from_version, to_version)
+        rewrites = [
+            s.version
+            for p, s in zip([base, *lineage], lineage)
+            if not _adds_rows_only(p, s)
+        ]
+        if rewrites:
+            raise VersioningError(
+                f"snapshots {rewrites} are not pure appends (they drop files "
+                "or add equality deletes) — incremental file-diff read would "
+                "be incorrect; use changelog() for row-level CDC across rewrites"
+            )
+        head = lineage[-1] if lineage else base
+        new_files = sorted(set(head.files) - set(base.files))
+        if not new_files:
+            return self._assemble(head).where(F.lit(False))
+        return self._assemble(head, files=new_files)
+
+    def _window(
+        self, from_version: int, to_version: int | None
+    ) -> tuple[Snapshot, list[Snapshot]]:
+        """``from_version``'s snapshot and the snapshots committed after
+        it up to ``to_version`` (default CURRENT) on to_version's
+        lineage, oldest first — the window of ``changes``/``changelog``."""
+        to_version = self._resolve_version(to_version)
         if from_version > to_version:
             raise VersioningError(
                 f"from_version {from_version} > to_version {to_version}"
             )
-        self.snapshot(from_version)  # validates existence
-        window = [
-            s
-            for s in self.snapshots()
-            if from_version < s.version <= to_version
-        ]
-        # walk the parent chain: only snapshots on to_version's lineage
-        # count (rollback branches must not leak in)
-        lineage: set[int] = set()
-        v: int | None = to_version
-        while v is not None and v > from_version:
-            snap = self.snapshot(v)
-            lineage.add(v)
-            v = snap.parent
-        if v != from_version and from_version != 0:
+        base = self.snapshot(from_version)
+        lineage = self._lineage(from_version, to_version)
+        if lineage is None:
             raise VersioningError(
                 f"v{from_version} is not an ancestor of v{to_version} "
-                "(rollback branch?) — incremental read undefined"
+                "(rollback branch or expired snapshot?) — the window of "
+                "changes is undefined"
             )
-        window = [s for s in window if s.version in lineage]
-        # "append" (batch) and "stream-append:<batch_id>" (exactly-once
-        # streaming sink) commits are both pure file additions
-        non_append = [
-            s.version
-            for s in window
-            if not (
-                s.op in ("append", "alter")  # alter is metadata-only:
-                # zero data files change, so the file diff stays exact
-                or s.op.startswith("stream-append:")
-            )
-        ]
-        if non_append:
-            raise VersioningError(
-                f"snapshots {non_append} are not pure appends — "
-                "incremental file-diff read would be incorrect; "
-                "use changelog() for row-level CDC across rewrites"
-            )
-        base = set(self.snapshot(from_version).files)
-        new_files = sorted(
-            {f for s in window for f in s.files if f not in base}
-        )
-        if not new_files:
-            return self.read(version=to_version).where(F.lit(False))
-        return self._assemble(self.snapshot(to_version), files=new_files)
+        return base, lineage
+
+    def _lineage(self, ancestor: int, head: int) -> list[Snapshot] | None:
+        """The snapshots after ``ancestor`` up to ``head`` on head's
+        parent chain, oldest first; None when ``ancestor`` is not on
+        that chain (a rollback branch, a main that advanced past a
+        branch's fork, or an expired manifest in between). A parent's
+        version is always lower than its child's, so the walk stops at
+        the first version not above ``ancestor``."""
+        out: list[Snapshot] = []
+        v: int | None = head
+        while v is not None and v > ancestor:
+            try:
+                snap = self.snapshot(v)
+            except VersioningError:
+                return None  # ancestor manifest expired: the chain ends here
+            out.append(snap)
+            v = snap.parent
+        return out[::-1] if v == ancestor else None
 
     # -- row-level ops with history (#19/#20 × #15) --------------------
 
@@ -1366,55 +1330,42 @@ class VersionedTable:
         update_after} and ``_commit_version``.
 
         Per commit on the lineage:
-        - append / stream-append / branch-append → inserts, read from
-          ONLY the delta files (zero extra cost, same as ``changes``);
+        - commits that only add rows (appends of any kind, ALTERs) →
+          inserts, read from ONLY the delta files (zero extra cost,
+          same as ``changes``);
         - compact → byte-identical rewrite, contributes nothing;
-        - merge / delete / overwrite → the captured changelog when the
-          commit wrote one, else a snapshot diff (``exceptAll`` both
-          ways → minimal insert/delete images; correct but O(|table|)
-          — capture at write time to avoid it). Snapshot-diff deltas
-          cannot distinguish updates from delete+insert pairs; captured
-          merge changelogs do."""
-        if to_version is None:
-            to_version = self.current_version()
-            if to_version is None:
-                raise VersioningError(f"empty versioned table at {self.root}")
-        if from_version > to_version:
-            raise VersioningError(
-                f"from_version {from_version} > to_version {to_version}"
-            )
-        self.snapshot(from_version)  # validates existence
-        lineage: list[Snapshot] = []
-        v: int | None = to_version
-        while v is not None and v > from_version:
-            snap = self.snapshot(v)
-            lineage.append(snap)
-            v = snap.parent
-        if v != from_version and from_version != 0:
-            raise VersioningError(
-                f"v{from_version} is not an ancestor of v{to_version} "
-                "(rollback branch?) — changelog undefined"
-            )
-        base_cols = self.read(version=to_version).columns
+        - merge / delete / overwrite / equality delete → the captured
+          changelog when the commit wrote one, else a snapshot diff
+          (``exceptAll`` both ways → minimal insert/delete images;
+          correct but O(|table|) — capture at write time to avoid it).
+          Snapshot-diff deltas cannot distinguish updates from
+          delete+insert pairs; captured merge changelogs do.
+
+        Insert images are read in ``to_version``'s namespace, as
+        ``changes`` reads them: renames, added columns (NULL for older
+        rows) and widens committed later in the window apply."""
+        base, lineage = self._window(from_version, to_version)
+        head = lineage[-1] if lineage else base
+        # a commit's own equality deletes never cover the files it adds
+        # (a delete applies to strictly earlier eras), so insert images
+        # take only head's namespace; later deletes show as their own
+        # commits' delete images
+        insert_ns = replace(head, eq_deletes=[])
+        base_cols = self._assemble(head).columns
         parts: list[DataFrame] = []
-        for snap in sorted(lineage, key=lambda s: s.version):
+        for parent, snap in zip([base, *lineage], lineage):
             cv = F.lit(snap.version).alias("_commit_version")
             if snap.op == "compact":
                 continue
-            if snap.op == "append" or snap.op.startswith(
-                ("stream-append", "branch-append")
-            ):
-                parent_files = (
-                    set(self.snapshot(snap.parent).files) if snap.parent else set()
-                )
+            if _adds_rows_only(parent, snap):
+                parent_files = set(parent.files)
                 new_files = [f for f in snap.files if f not in parent_files]
-                if not new_files:
-                    continue
-                parts.append(
-                    self._assemble(snap, files=new_files)
-                    .withColumn("_change_type", F.lit("insert"))
-                    .withColumn("_commit_version", cv)
-                )
+                if new_files:
+                    parts.append(
+                        self._assemble(insert_ns, files=new_files)
+                        .withColumn("_change_type", F.lit("insert"))
+                        .withColumn("_commit_version", cv)
+                    )
                 continue
             if os.path.isdir(self._changelog_dir(snap.version)):
                 parts.append(
@@ -1423,12 +1374,7 @@ class VersionedTable:
                 )
                 continue
             # uncaptured rewrite: minimal snapshot diff (nets unchanged rows)
-            after = self.read(version=snap.version)
-            before = (
-                self.read(version=snap.parent)
-                if snap.parent is not None
-                else after.where(F.lit(False))
-            )
+            after, before = self._assemble(snap), self._assemble(parent)
             parts.append(
                 after.exceptAll(before)
                 .withColumn("_change_type", F.lit("insert"))
@@ -1442,7 +1388,7 @@ class VersionedTable:
         out_cols = [*base_cols, "_change_type", "_commit_version"]
         if not parts:
             return (
-                self.read(version=to_version)
+                self._assemble(head)
                 .withColumn("_change_type", F.lit(""))
                 .withColumn("_commit_version", F.lit(0))
                 .select(*out_cols)
@@ -1465,15 +1411,12 @@ class VersionedTable:
         keep their original small files (still time-travelable); data
         is only ever added, GC of unreachable files is a separate
         concern (as in Iceberg's expire_snapshots)."""
-        cur = self.current_version()
-        if cur is None:
-            raise VersioningError(f"empty versioned table at {self.root}")
-        snap = self.snapshot(cur)
+        snap = self.snapshot(self._resolve_version())
         if target_files is None:
             # ~128 MB target from observed on-disk size
             total = sum(os.path.getsize(_local_path(f)) for f in snap.files)
             target_files = max(1, total // (128 << 20) + (total % (128 << 20) > 0))
-        df = self.read(version=cur).coalesce(int(target_files))
+        df = self._assemble(snap).coalesce(int(target_files))
         return self.write(df, mode="overwrite", _op="compact")
 
     def expire_snapshots(self, keep_last: int = 2) -> dict[str, int]:
@@ -1609,9 +1552,10 @@ class VersionedTable:
         return v
 
     def create_branch(self, name: str, at_version: int | None = None) -> int:
-        """Branch from CURRENT (or an explicit snapshot). Writes via
-        ``write_to_branch`` advance only the branch ref — main readers
-        see nothing until ``publish_branch`` fast-forwards CURRENT."""
+        """Branch from CURRENT (or an explicit snapshot). ``write``,
+        ``alter_table`` and ``alter_column_type`` with ``branch=name``
+        advance only the branch ref — main readers see nothing until
+        ``publish_branch`` fast-forwards CURRENT."""
         return self._make_ref(name, "branch", at_version)
 
     def create_tag(self, name: str, at_version: int | None = None) -> int:
@@ -1632,53 +1576,17 @@ class VersionedTable:
             raise VersioningError(f"no ref {name!r} (have: {sorted(refs)})")
         return refs[name]["version"]
 
-    def write_to_branch(self, df: DataFrame, branch: str, mode: str = "append") -> int:
-        """Commit a snapshot whose parent is the branch head and move
-        ONLY the branch ref — the staging half of write-audit-publish.
-        Data files land distributed exactly as in ``write``; CURRENT is
-        untouched, so main-branch readers keep snapshot isolation from
-        in-audit data."""
-        if mode not in ("append", "overwrite"):
-            raise VersioningError(f"mode must be append/overwrite, got {mode!r}")
+    def _branch_refs(self, branch: str) -> dict[str, dict]:
+        """The refs, after checking that ``branch`` names a branch."""
         refs = self.refs()
-        if branch not in refs or refs[branch]["type"] != "branch":
+        kind = refs.get(branch, {}).get("type")
+        if kind != "branch":
             raise VersioningError(
-                f"no branch {branch!r} — create_branch first (refs: {refs})"
+                f"no branch {branch!r} — "
+                + ("it is a tag" if kind == "tag"
+                   else f"create_branch first (refs: {refs})")
             )
-        parent = refs[branch]["version"]
-        new_version = self._next_version()
-        data_dir = os.path.join(self.root, "data", f"v{new_version}")
-        df.write.mode("errorifexists").parquet(data_dir)
-        files = [
-            _local_path(f)
-            for f in self.spark.read.parquet(data_dir).inputFiles()
-        ]
-        stats = _collect_file_stats(files)
-        parent_snap = self.snapshot(parent)
-        # carry the parent's FULL metadata exactly like write() — a
-        # manually-built manifest here silently reverted renames/adds/
-        # drops to physical names and resurrected equality-deleted rows
-        # on branch staging (round-9 ADVICE finding)
-        eq_deletes: list = []
-        if mode == "append":
-            files += parent_snap.files
-            stats.update(parent_snap.stats)
-            eq_deletes = parent_snap.eq_deletes
-        v = self._commit(
-            files,
-            f"branch-{mode}",
-            parent,
-            new_version,
-            stats,
-            rename_log=parent_snap.rename_log,
-            schema=parent_snap.schema,
-            eq_deletes=eq_deletes,
-            type_log=parent_snap.type_log,
-            move_current=False,
-        )
-        refs[branch]["version"] = v
-        self._write_refs(refs)
-        return v
+        return refs
 
     def _key_fingerprints(self, df: DataFrame, on: list[str]) -> DataFrame:
         """Per-key payload fingerprint: md5 over the SORTED list of
@@ -1818,10 +1726,7 @@ class VersionedTable:
         sets — as a DataFrame the caller can inspect, join back against
         either head, or feed a manual resolution from. Read-only: no
         commit, no ref movement."""
-        refs = self.refs()
-        if branch not in refs or refs[branch]["type"] != "branch":
-            raise VersioningError(f"no branch {branch!r} (refs: {refs})")
-        tri, _, _ = self._merge_tri(branch, on, refs)
+        tri, _, _ = self._merge_tri(branch, on, self._branch_refs(branch))
         return tri.filter(
             F.col("o_ch") & F.col("t_ch") & F.col("diff_ot")
         ).select(*on)
@@ -1860,10 +1765,9 @@ class VersionedTable:
             raise VersioningError(
                 f"resolve must be None/'ours'/'theirs', got {resolve!r}"
             )
-        refs = self.refs()
-        if branch not in refs or refs[branch]["type"] != "branch":
-            raise VersioningError(f"no branch {branch!r} (refs: {refs})")
-        tri, ours, theirs = self._merge_tri(branch, on, refs)
+        tri, ours, theirs = self._merge_tri(
+            branch, on, self._branch_refs(branch)
+        )
         conflict = F.col("o_ch") & F.col("t_ch") & F.col("diff_ot")
         n_conflicts = tri.filter(conflict).count()
         if n_conflicts and resolve is None:
@@ -1901,28 +1805,15 @@ class VersionedTable:
         the branch head — if main advanced since the fork, the publish
         refuses (rebase by re-staging onto a fresh branch), mirroring
         Iceberg's fast_forward semantics."""
-        head = self.resolve_ref(branch)
-        if self.refs()[branch]["type"] != "branch":
-            raise VersioningError(f"{branch!r} is a tag — cannot publish")
+        head = self._branch_refs(branch)[branch]["version"]
         cur = self.current_version()
-        v: int | None = head
-        ancestors = set()
-        while v is not None:
-            ancestors.add(v)
-            try:
-                v = self.snapshot(v).parent
-            except VersioningError:
-                break  # ancestor manifest expired — chain provably ends here
-        if cur is not None and cur not in ancestors:
+        if cur is not None and self._lineage(cur, head) is None:
             raise VersioningError(
                 f"main (v{cur}) is not an ancestor of branch {branch!r} "
                 f"(head v{head}) — main advanced since the fork; "
                 "re-stage onto a fresh branch"
             )
-        tmp = os.path.join(self._meta, "CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(head))
-        os.replace(tmp, os.path.join(self._meta, "CURRENT"))
+        self._move(None, head)
         if drop:
             self.drop_ref(branch)
         return head
@@ -1950,7 +1841,7 @@ class VersionedTable:
                 "failed its audit; inspect read_branch() then drop_ref()"
             )
         self.create_branch(branch)
-        staged = self.write_to_branch(df, branch, mode=mode)
+        staged = self.write(df, mode, branch=branch)
         report = validate(self.read_branch(branch), rules).collect()
         failed = [r for r in report if not r.passed]
         if failed:
@@ -1972,7 +1863,4 @@ class VersionedTable:
         """Point CURRENT at an older snapshot (new writes branch from
         it). The abandoned snapshots' manifests remain for audit."""
         self.snapshot(version)  # validates existence
-        tmp = os.path.join(self._meta, "CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, os.path.join(self._meta, "CURRENT"))
+        self._move(None, version)

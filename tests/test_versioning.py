@@ -384,7 +384,7 @@ def test_cli_changes(spark, tmp_path, capsys):
 def test_branch_write_isolated_until_publish(spark, vt):
     v1 = vt.write(_df(spark, 0, 5))
     vt.create_branch("stage")
-    bv = vt.write_to_branch(_df(spark, 5, 8), "stage", mode="append")
+    bv = vt.write(_df(spark, 5, 8), mode="append", branch="stage")
     # main readers see nothing from the branch
     assert vt.read().count() == 5
     assert vt.current_version() == v1
@@ -399,7 +399,7 @@ def test_branch_write_isolated_until_publish(spark, vt):
 def test_publish_refuses_diverged_main(spark, vt):
     vt.write(_df(spark, 0, 5))
     vt.create_branch("stage")
-    vt.write_to_branch(_df(spark, 5, 8), "stage")
+    vt.write(_df(spark, 5, 8), branch="stage")
     vt.write(_df(spark, 100, 101))  # main advances past the fork
     with pytest.raises(VersioningError, match="not an ancestor"):
         vt.publish_branch("stage")
@@ -460,7 +460,7 @@ def test_cli_branch_lifecycle(spark, tmp_path, capsys):
     assert main(["branch", root, "create", "stage"]) == 0
     out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["refs"]["stage"]["type"] == "branch"
-    vt.write_to_branch(_df(spark, 5, 8), "stage")
+    vt.write(_df(spark, 5, 8), branch="stage")
     assert main(["branch", root, "publish", "stage"]) == 0
     out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["refs"] == {}
@@ -1111,7 +1111,7 @@ def test_cli_alter_delete_eq_and_merge(spark, tmp_path, capsys):
     fixed = vt.read().withColumn(
         "val", F.when(F.col("id") == 3, F.lit(999)).otherwise(F.col("val"))
     )
-    vt.write_to_branch(fixed, "fix", mode="overwrite")
+    vt.write(fixed, mode="overwrite", branch="fix")
     vt.write(
         spark.createDataFrame([(10, 100, None)], "id long, val long, tag string")
     )
@@ -1205,7 +1205,7 @@ def test_rename_onto_previously_dropped_name(spark, vt):
     assert (got.id, got.old) == (1, 10)  # v's data, not the dropped 99
 
 
-def test_write_to_branch_preserves_alter_and_mor(spark, vt):
+def test_branch_write_preserves_alter_and_mor(spark, vt):
     """Round-9 ADVICE (high): branch staging used to rebuild its
     manifest by hand, dropping schema/rename_log/eq_deletes — an
     append to a branch of an ALTERed + MOR-deleted table silently
@@ -1215,9 +1215,9 @@ def test_write_to_branch_preserves_alter_and_mor(spark, vt):
     vt.alter_table(renames={"v": "val"}, adds=["tag string"])
     vt.delete_where_eq("val = 20", keys=["id"])
     vt.create_branch("stage")
-    vt.write_to_branch(
+    vt.write(
         spark.createDataFrame([(9, 90, "t")], "id long, val long, tag string"),
-        "stage",
+        branch="stage",
     )
     got = {r.id: (r.val, r.tag) for r in vt.read_branch("stage").collect()}
     # renamed column intact, added column intact, deleted row STILL deleted
@@ -1246,9 +1246,9 @@ def test_merge_conflicts_and_resolve(spark, vt):
         [(1, 10), (2, 20), (3, 30)], "id long, v long"))
     vt.create_branch("b")
     # branch edits id=2 -> 222 and id=3 -> 333
-    vt.write_to_branch(
+    vt.write(
         spark.createDataFrame([(1, 10), (2, 222), (3, 333)], "id long, v long"),
-        "b", mode="overwrite")
+        mode="overwrite", branch="b")
     # main edits id=2 -> 200 (conflict with branch) and adds id=4
     vt.write(spark.createDataFrame(
         [(1, 10), (2, 200), (3, 30), (4, 40)], "id long, v long"),
@@ -1266,9 +1266,9 @@ def test_merge_conflicts_and_resolve(spark, vt):
 def test_merge_resolve_ours_keeps_main_conflicts(spark, vt):
     vt.write(spark.createDataFrame([(1, 10), (2, 20)], "id long, v long"))
     vt.create_branch("b")
-    vt.write_to_branch(
+    vt.write(
         spark.createDataFrame([(1, 111), (2, 222)], "id long, v long"),
-        "b", mode="overwrite")
+        mode="overwrite", branch="b")
     vt.write(spark.createDataFrame([(1, 100), (2, 20)], "id long, v long"),
              mode="overwrite")
     res = vt.merge_branch("b", on=["id"], resolve="ours")
@@ -1287,9 +1287,9 @@ def test_merge_reconciles_mid_branch_rename_and_add(spark, vt):
     vt.create_branch("evo")
     vt.alter_table(renames={"v": "val"}, branch="evo")
     vt.alter_table(adds=["tag string"], branch="evo")
-    vt.write_to_branch(
+    vt.write(
         spark.createDataFrame([(9, 90, "new")],
-                              "id long, val long, tag string"), "evo")
+                              "id long, val long, tag string"), branch="evo")
     # main advances independently (no overlap -> no conflict)
     vt.write(spark.createDataFrame([(4, 40)], "id long, v long"))
     res = vt.merge_branch("evo", on=["id"])
@@ -1307,8 +1307,8 @@ def test_merge_reconciles_mid_branch_widen_and_drop(spark, vt):
     vt.create_branch("evo")
     vt.alter_column_type({"qty": "bigint"}, branch="evo")
     vt.alter_table(drops=["junk"], branch="evo")
-    vt.write_to_branch(
-        spark.createDataFrame([(3, 2**40)], "id long, qty bigint"), "evo")
+    vt.write(
+        spark.createDataFrame([(3, 2**40)], "id long, qty bigint"), branch="evo")
     vt.write(spark.createDataFrame(
         [(4, 9, "z")], "id long, qty int, junk string"))
     res = vt.merge_branch("evo", on=["id"])
@@ -1325,3 +1325,71 @@ def test_merge_rejects_dtype_mismatch_and_no_payload(spark, vt):
     vt.create_branch("b")
     with pytest.raises(VersioningError, match="cover every column"):
         vt.merge_branch("b", on=["id", "v"])
+
+
+# -- one commit path: incremental reads across ALTER and branch commits --
+
+
+def test_changelog_across_add_column_alter(spark, vt):
+    vt.write(_df(spark, 0, 5))
+    vt.write(_df(spark, 5, 7))
+    vt.alter_table(adds=["note string"])
+    vt.write(spark.createDataFrame(
+        [(9, 90, "new")], "id long, v long, note string"))
+    out = vt.changelog(1, 4)
+    assert out.columns == ["id", "v", "note", "_change_type", "_commit_version"]
+    got = sorted(
+        (r.id, r.v, r.note, r._change_type, r._commit_version)
+        for r in out.collect()
+    )
+    assert got == [
+        (5, 50, None, "insert", 2),
+        (6, 60, None, "insert", 2),
+        (9, 90, "new", "insert", 4),
+    ]
+
+
+def test_changes_across_alter_column_type(spark, vt):
+    vt.write(spark.createDataFrame([(1, 10), (2, 20)], "id long, v int"))
+    vt.write(spark.createDataFrame([(3, 30)], "id long, v int"))
+    vt.alter_column_type({"v": "bigint"})
+    vt.write(spark.createDataFrame([(4, 2**40)], "id long, v bigint"))
+    inc = vt.changes(1, 4)
+    assert dict(inc.dtypes)["v"] == "bigint"
+    assert sorted((r.id, r.v) for r in inc.collect()) == [(3, 30), (4, 2**40)]
+
+
+def test_changes_after_wap_feeds_the_view_delta_path(spark, tmp_path):
+    from aws_iceberg_automation_spark.matview import IncrementalAggView, Measure
+    from aws_iceberg_automation_spark.operators.dq import Rule
+
+    src = VersionedTable(spark, str(tmp_path / "src"))
+    mv = IncrementalAggView(
+        spark, src, str(tmp_path / "mv"), group_by=["k"],
+        measures=[Measure("n", "count")],
+    )
+    rows = _df(spark, 0, 5).withColumn("k", F.col("id") % 2)
+    src.write(rows)
+    mv.refresh()
+    out = src.write_audit_publish(
+        _df(spark, 5, 10).withColumn("k", F.col("id") % 2),
+        [Rule("v_non_negative", F.col("v") >= 0)],
+    )
+    assert out["published"] is True
+    assert sorted(r.id for r in src.changes(1).collect()) == [5, 6, 7, 8, 9]
+    state_v = mv.refresh()
+    assert mv.state.snapshot(state_v).op == f"refresh:{out['version']}:delta"
+    assert {r.k: r.n for r in mv.read().collect()} == {0: 5, 1: 5}
+
+
+def test_branch_overwrite_declares_the_frames_schema(spark, vt):
+    vt.write(spark.createDataFrame([(1, 10)], "id long, val long"))
+    vt.alter_table(adds=["tag string"])
+    vt.create_branch("b")
+    bv = vt.write(
+        spark.createDataFrame([(2, "x")], "id long, val string"),
+        mode="overwrite", branch="b",
+    )
+    assert vt.snapshot(bv).schema == [["id", "bigint"], ["val", "string"]]
+    assert vt.read_branch("b").dtypes == [("id", "bigint"), ("val", "string")]
+    assert [(r.id, r.val) for r in vt.read_branch("b").collect()] == [(2, "x")]
