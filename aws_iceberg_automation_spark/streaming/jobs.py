@@ -10,6 +10,18 @@ event-time order and streamed with ``maxFilesPerTrigger=1`` +
 ``Trigger.AvailableNow`` — a deterministic multi-microbatch execution
 in which watermarks actually advance and late rows actually drop.
 
+Runner contract: every sink here runs its query through ``_run``, which
+starts it with ``Trigger.AvailableNow`` (drain what the source holds,
+then stop), pins the stateful-shuffle width to
+``STREAM_STATE_PARTITIONS`` for the query's lifetime and restores the
+session's width when it terminates (or fails), and blocks until the
+query terminates. The foreachBatch sinks go through
+``_for_each_batch``, which skips empty microbatches before their
+per-batch step runs. The exactly-once appends (``_append_once``) tag
+each commit with its microbatch id and skip a microbatch whose tag is
+already in the table's snapshot log — a redelivery after a crash
+between commit and checkpoint.
+
 Scale posture (100 TB/day): these plans are the standard production
 shapes — watermark-bounded state in per-key aggregates, dropDuplicates
 state keyed by event_id with the watermark bounding retention (#76),
@@ -21,13 +33,22 @@ stream-static broadcast joins for dimension enrichment (#79), and an
 from __future__ import annotations
 
 import contextlib
+import functools
+import json
 import os
-from collections.abc import Iterator
+import time
+import uuid
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import (
+    DataStreamWriter,
+    StreamingQuery,
+    StreamingQueryListener,
+)
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
@@ -70,17 +91,24 @@ def prepare_replay_dir(spark: SparkSession, sf_dir: str, out_dir: str, n_chunks:
         .persist()
     )
     try:
-        for i in range(n_chunks):
-            (
-                chunked.filter(F.col("chunk") == i)
-                .drop("chunk")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(out_dir, f"chunk={i}"))
-            )
+        _write_chunks(chunked, out_dir, n_chunks)
     finally:
         chunked.unpersist()
     return out_dir
+
+
+def _write_chunks(chunked: DataFrame, out_dir: str, n_chunks: int) -> None:
+    """Write each ``chunk`` label of ``chunked`` as one parquet file
+    under ``out_dir/chunk=<i>``, in label order: file modification
+    times give the file-stream source its replay order."""
+    for i in range(n_chunks):
+        (
+            chunked.filter(F.col("chunk") == i)
+            .drop("chunk")
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(os.path.join(out_dir, f"chunk={i}"))
+        )
 
 
 def prepare_scrambled_replay_dir(
@@ -110,14 +138,7 @@ def prepare_scrambled_replay_dir(
         F.pmod(F.xxhash64(F.col("event_id"), F.lit(salt)), F.lit(n_chunks)),
     ).persist()
     try:
-        for i in range(n_chunks):
-            (
-                chunked.filter(F.col("chunk") == i)
-                .drop("chunk")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(out_dir, f"chunk={i}"))
-            )
+        _write_chunks(chunked, out_dir, n_chunks)
         ranges = (
             chunked.groupBy("chunk")
             .agg(F.min("ts").alias("lo"), F.max("ts").alias("hi"))
@@ -397,22 +418,67 @@ def _stream_state_partitions(spark: SparkSession):
         spark.conf.set(key, old)
 
 
-def run_to_memory(
-    sdf: DataFrame, name: str, output_mode: str = "complete"
-) -> DataFrame:
-    """Execute a streaming frame to completion with Trigger.AvailableNow
-    into a memory sink; returns the materialized result table."""
-    spark = sdf.sparkSession
-    with _stream_state_partitions(spark):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
+def _run(writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer``'s query with Trigger.AvailableNow under the
+    width pin and block until it terminates; returns the terminated
+    query. The only place a stream in this module starts."""
+    # a DataStreamWriter keeps the session of the frame it was made from
+    with _stream_state_partitions(writer._spark):
+        q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
-    return spark.table(name)
+    return q
+
+
+def _for_each_batch(
+    sdf: DataFrame, checkpoint: str, step: Callable[[DataFrame, int], None]
+) -> None:
+    """Run ``step(batch_df, batch_id)`` on every non-empty microbatch
+    of ``sdf`` through a checkpointed foreachBatch sink."""
+
+    def run_step(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            step(batch_df, batch_id)
+
+    _run(
+        sdf.writeStream.foreachBatch(run_step).option(
+            "checkpointLocation", checkpoint
+        )
+    )
+
+
+def _append_once(versioned, df: DataFrame, batch_id: int) -> None:
+    """Append ``df`` to ``versioned`` as one snapshot tagged with
+    ``batch_id``, unless that tag is already committed (a redelivered
+    microbatch) — Iceberg's own streaming-sink exactly-once scheme.
+    Runs no Spark job of its own."""
+    op = f"stream-append:{batch_id}"
+    if not any(s.op == op for s in versioned.snapshots()):
+        versioned.write(df, mode="append", _op=op)
+
+
+def _latest_per_key(df: DataFrame, on: list[str], order: list[str]) -> DataFrame:
+    """One row per ``on`` key: the first by DESC ``order`` (a MERGE
+    source must have unique keys)."""
+    w = Window.partitionBy(*on).orderBy(*[F.col(c).desc() for c in order])
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
+def _memory_run(sdf: DataFrame, output_mode: str) -> tuple[DataFrame, StreamingQuery]:
+    """Run ``sdf`` into a memory sink under a fresh query name; returns
+    the materialized table and the terminated query."""
+    name = f"stream_mem_{uuid.uuid4().hex}"
+    q = _run(sdf.writeStream.format("memory").queryName(name).outputMode(output_mode))
+    return sdf.sparkSession.table(name), q
+
+
+def run_to_memory(sdf: DataFrame, output_mode: str = "complete") -> DataFrame:
+    """Execute a streaming frame to completion into a memory sink;
+    returns the materialized result table."""
+    return _memory_run(sdf, output_mode)[0]
 
 
 def foreach_batch_upsert(
@@ -427,30 +493,13 @@ def foreach_batch_upsert(
     identical call path on the parquet fallback). foreachBatch gives
     batch-API power inside a stream; the checkpoint makes redelivered
     microbatches idempotent *because the write is a keyed MERGE*, not a
-    blind append."""
+    blind append. Last write wins per key within a batch."""
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # MERGE requires unique source keys; last-write-wins per batch.
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy(*on).orderBy(F.col("ts").desc(), F.col("event_id").desc())
-        deduped = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        deduped = _latest_per_key(batch_df, on, ["ts", "event_id"])
         manager.merge_upsert(table, deduped, on=on)
 
-    with _stream_state_partitions(sdf.sparkSession):
-        q = (
-            sdf.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _for_each_batch(sdf, checkpoint, upsert)
 
 
 def foreach_batch_versioned_upsert(
@@ -485,17 +534,7 @@ def foreach_batch_versioned_upsert(
     cross-batch semantics for append-time-ordered sources."""
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from pyspark.sql import Window as W
-
-        order = [F.col(c).desc() for c in (precedence or ["ts", "event_id"])]
-        w = W.partitionBy(*on).orderBy(*order)
-        deduped = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        deduped = _latest_per_key(batch_df, on, precedence or ["ts", "event_id"])
         if versioned.current_version() is None:
             versioned.write(deduped, mode="append")
         elif precedence is None:
@@ -510,30 +549,19 @@ def foreach_batch_versioned_upsert(
             # in merge.
             versioned.merge(deduped, on=on, precedence=precedence)
 
-    with _stream_state_partitions(sdf.sparkSession):
-        q = (
-            sdf.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _for_each_batch(sdf, checkpoint, upsert)
 
 
 def write_stream_parquet(sdf: DataFrame, path: str, checkpoint: str, output_mode: str = "append"):
     """Streaming sink (#22): parquet append with checkpointing (swap
     format('iceberg') when the runtime is on the classpath — identical
     call shape)."""
-    with _stream_state_partitions(sdf.sparkSession):
-        q = (
-            sdf.writeStream.format("parquet")
-            .option("path", path)
-            .option("checkpointLocation", checkpoint)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run(
+        sdf.writeStream.format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", checkpoint)
+        .outputMode(output_mode)
+    )
     return path
 
 
@@ -544,30 +572,11 @@ def foreach_batch_versioned_append(
 ):
     """Exactly-once streaming APPEND into a versioned table — the
     immutable-log ingest shape (event streams, crawled documents) where
-    rows are facts, not upserts. Each microbatch commits one snapshot
-    tagged ``stream-append:<batch_id>``; a redelivered microbatch (the
-    failure mode blind append gets wrong) is detected by its batch id
-    in the snapshot log and skipped, which is how Iceberg's own
-    streaming sink achieves exactly-once. Because every commit is a
-    pure append, downstream consumers can read
-    ``versioned.changes(from_v)`` and process only the delta."""
-
-    def append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        op = f"stream-append:{batch_id}"
-        if any(s.op == op for s in versioned.snapshots()):
-            return  # redelivered microbatch — already committed
-        versioned.write(batch_df, mode="append", _op=op)
-
-    with _stream_state_partitions(sdf.sparkSession):
-        q = (
-            sdf.writeStream.foreachBatch(append)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    rows are facts, not upserts: one tagged snapshot per microbatch
+    (``_append_once``). Because every commit is a pure append,
+    downstream consumers can read ``versioned.changes(from_v)`` and
+    process only the delta."""
+    _for_each_batch(sdf, checkpoint, functools.partial(_append_once, versioned))
 
 
 def foreach_batch_validated_append(
@@ -580,9 +589,8 @@ def foreach_batch_validated_append(
     """Validated streaming ingest: the DQ rule suite (operators/dq.py)
     gates every microbatch — rows passing ALL rules commit to the main
     versioned table, violating rows commit to a quarantine table with
-    the names of the rules they broke. Both sides are exactly-once via
-    batch-id-tagged snapshots (same dedup-on-redelivery contract as
-    ``foreach_batch_versioned_append``).
+    the names of the rules they broke. Both sides are exactly-once
+    appends (``_append_once``); an empty side commits nothing.
 
     The split is two filters over one row-level violation bitmap
     (computed once as array_compact of per-rule CASE markers — a map
@@ -590,12 +598,8 @@ def foreach_batch_validated_append(
     keeps a 100 TB/day pipeline queryable: bad vendor drops land in
     quarantine with a reason, never silently into the corpus and never
     as a dead job at 3am (FAILFAST's failure mode)."""
-    from ..operators.dq import Rule  # noqa: F401  (documents the rule type)
 
     def split(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        op = f"stream-append:{batch_id}"
         markers = F.array_compact(
             F.array(
                 *[
@@ -611,34 +615,25 @@ def foreach_batch_validated_append(
         bad = tagged.filter(F.size("__broken") > 0).withColumn(
             "violated_rules", F.array_join("__broken", ",")
         ).drop("__broken")
-        if not any(s.op == op for s in versioned.snapshots()):
-            if not clean.isEmpty():
-                versioned.write(clean, mode="append", _op=op)
-        if not any(s.op == op for s in quarantine.snapshots()):
-            if not bad.isEmpty():
-                quarantine.write(bad, mode="append", _op=op)
+        for table, rows in ((versioned, clean), (quarantine, bad)):
+            if not rows.isEmpty():
+                _append_once(table, rows, batch_id)
 
-    with _stream_state_partitions(sdf.sparkSession):
-        q = (
-            sdf.writeStream.foreachBatch(split)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _for_each_batch(sdf, checkpoint, split)
 
 
-def stream_stream_attribution(events: DataFrame, window_minutes: int = 30) -> DataFrame:
-    """Stream-stream inner join: each click joined to the purchases the
-    same user makes within ``window_minutes`` after it — ad-attribution,
-    the canonical two-stream correlation. Both sides carry watermarks
-    AND the join condition bounds event-time distance, which is what
-    lets Spark garbage-collect join state: a buffered click can be
-    dropped once the purchase-side watermark passes click_ts +
-    window (state is bounded by watermark delay + join window, never
-    by stream length). Self-join of one source stream: Spark plans two
-    independent scans of the file source — fine; at scale the two
-    sides are usually distinct topics anyway."""
+def _attribution_sides(
+    events: DataFrame, window_minutes: int
+) -> tuple[DataFrame, DataFrame, Column]:
+    """The two watermarked sides of the click→purchase attribution
+    joins and their join condition: same user, purchase within
+    ``window_minutes`` after the click. Both watermarks plus the
+    event-time bound are what let Spark garbage-collect join state: a
+    buffered click can be dropped once the purchase-side watermark
+    passes click_ts + window (state is bounded by watermark delay +
+    join window, never by stream length). Self-join of one source
+    stream: Spark plans two independent scans of the file source —
+    fine; at scale the two sides are usually distinct topics anyway."""
     clicks = (
         events.filter(F.col("event_type") == "click")
         .select(
@@ -665,6 +660,15 @@ def stream_stream_attribution(events: DataFrame, window_minutes: int = 30) -> Da
             <= F.col("click_ts") + F.expr(f"INTERVAL {window_minutes} MINUTES")
         )
     )
+    return clicks, purchases, cond
+
+
+def stream_stream_attribution(events: DataFrame, window_minutes: int = 30) -> DataFrame:
+    """Stream-stream inner join: each click joined to the purchases the
+    same user makes within ``window_minutes`` after it — ad-attribution,
+    the canonical two-stream correlation (sides, watermarks and state
+    bound: ``_attribution_sides``)."""
+    clicks, purchases, cond = _attribution_sides(events, window_minutes)
     return clicks.join(purchases, cond).select(
         "user_id",
         "click_id",
@@ -742,8 +746,8 @@ def foreach_batch_append_with_rollup(
     checkpoint: str,
 ):
     """Streaming ingest with a live incremental rollup: each microbatch
-    (1) appends exactly-once into the versioned table (batch-id-tagged
-    snapshot, redelivery skipped) and (2) advances the
+    (1) appends exactly-once into the versioned table
+    (``_append_once``) and (2) advances the
     ``matview.IncrementalAggView`` built over it — so the aggregate is
     queryable at microbatch latency while only ever aggregating each
     batch's delta (``view.refresh()`` reads ``source.changes()``, never
@@ -758,21 +762,10 @@ def foreach_batch_append_with_rollup(
     snapshot log — the table, not the stream, is the source of truth."""
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        op = f"stream-append:{batch_id}"
-        if not any(s.op == op for s in versioned.snapshots()):
-            versioned.write(batch_df, mode="append", _op=op)
+        _append_once(versioned, batch_df, batch_id)
         view.refresh()
 
-    with _stream_state_partitions(sdf.sparkSession):
-        q = (
-            sdf.writeStream.foreachBatch(step)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _for_each_batch(sdf, checkpoint, step)
 
 
 def stream_stream_attribution_outer(
@@ -792,32 +785,7 @@ def stream_stream_attribution_outer(
     match later, so batch-equality checks (and any downstream exactness
     contract) apply only behind that horizon — see
     q146_stream_stream_left_outer for the filtered comparison."""
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            ts_sec("ts").cast("timestamp").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            ts_sec("ts").cast("timestamp").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_id"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    cond = (
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {window_minutes} MINUTES")
-        )
-    )
+    clicks, purchases, cond = _attribution_sides(events, window_minutes)
     return clicks.join(purchases, cond, "left_outer").select(
         "user_id",
         "click_id",
@@ -844,32 +812,7 @@ def stream_stream_attribution_full(
     rows anchored younger than (max event time − delay − window −
     margin) are indeterminate; q264 filters both sides to the horizon
     before comparing against the batch full join."""
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            ts_sec("ts").cast("timestamp").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            ts_sec("ts").cast("timestamp").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_id"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    cond = (
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {window_minutes} MINUTES")
-        )
-    )
+    clicks, purchases, cond = _attribution_sides(events, window_minutes)
     return clicks.join(purchases, cond, "full_outer").select(
         F.coalesce(F.col("user_id"), F.col("p_user_id")).alias("user_id"),
         "click_id",
@@ -893,13 +836,14 @@ class _ProgressCapture:
     def __init__(self) -> None:
         self.progress: list[dict] = []
         # Every Terminated event id is BUFFERED rather than compared at
-        # delivery: the listener bus is async, so a very fast
-        # (empty-source availableNow) query can terminate before the
-        # main thread assigns query_id — an at-delivery exact match
-        # would miss its own event and burn the full drain timeout.
+        # delivery: the listener bus is async and query_id is assigned
+        # only after the query has terminated, so the query's own event
+        # can arrive first — an at-delivery exact match would miss it
+        # and burn the full drain timeout.
         self.terminated_ids: set[str] = set()
-        # set after start(): only THIS query's Terminated event counts
-        # (another session query terminating must not end the drain wait)
+        # set once the query has run: only THIS query's Terminated event
+        # counts (another session query terminating must not end the
+        # drain wait)
         self.query_id: str | None = None
 
     @property
@@ -907,10 +851,6 @@ class _ProgressCapture:
         return self.query_id is not None and self.query_id in self.terminated_ids
 
     def make(self):
-        import json as _json
-
-        from pyspark.sql.streaming import StreamingQueryListener
-
         capture = self
 
         class _L(StreamingQueryListener):
@@ -918,7 +858,7 @@ class _ProgressCapture:
                 pass
 
             def onQueryProgress(self, event) -> None:
-                capture.progress.append(_json.loads(event.progress.json))
+                capture.progress.append(json.loads(event.progress.json))
 
             def onQueryIdle(self, event) -> None:
                 pass
@@ -934,31 +874,21 @@ class _ProgressCapture:
 
 
 def run_to_memory_with_metrics(
-    sdf: DataFrame, name: str, output_mode: str = "complete"
+    sdf: DataFrame, output_mode: str = "complete"
 ) -> tuple[DataFrame, list[dict]]:
     """run_to_memory plus captured per-microbatch progress telemetry:
     returns (result frame, list of progress dicts — one per microbatch,
     each with numInputRows, batchId, stateOperators, durationMs). The
     listener-based pattern is how a production job wires throughput /
     state-size / watermark-lag alerting without touching the query."""
-    import time
-
     spark = sdf.sparkSession
     cap = _ProgressCapture()
     listener = cap.make()
     spark.streams.addListener(listener)
     try:
-        with _stream_state_partitions(spark):
-            q = (
-                sdf.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            cap.query_id = str(q.id)
-            q.awaitTermination()
-        # The listener bus is async: awaitTermination() returning does
+        out, q = _memory_run(sdf, output_mode)
+        cap.query_id = str(q.id)
+        # The listener bus is async: the query having terminated does
         # not mean the last progress events reached Python yet. The
         # bus is FIFO, so once the Terminated event lands, every
         # Progress event before it has too — wait (bounded) for it.
@@ -967,4 +897,4 @@ def run_to_memory_with_metrics(
             time.sleep(0.05)
     finally:
         spark.streams.removeListener(listener)
-    return spark.table(name), cap.progress
+    return out, cap.progress

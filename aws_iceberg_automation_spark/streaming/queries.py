@@ -8,7 +8,6 @@ form of #80's batch-equivalence requirement.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,7 +61,6 @@ def q72_stream_tumbling_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch SQL oracle (#72, #73, #80)."""
     out = jobs.run_to_memory(
         jobs.tumbling_agg(jobs.with_watermark(_stream(spark, sf_dir))),
-        f"q72_mem_{uuid.uuid4().hex[:8]}",
     )
     return out
 
@@ -86,7 +84,6 @@ def q74b_stream_sliding_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical oracle — stream == batch == oracle, transitively."""
     return jobs.run_to_memory(
         jobs.sliding_agg(jobs.with_watermark(_stream(spark, sf_dir))),
-        f"q74b_mem_{uuid.uuid4().hex[:8]}",
     )
 
 
@@ -97,7 +94,6 @@ def q75c_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-matches the lag/cumulative-flag SQL oracle."""
     return jobs.run_to_memory(
         jobs.session_agg(jobs.with_watermark(_stream(spark, sf_dir))),
-        f"q75c_mem_{uuid.uuid4().hex[:8]}",
     )
 
 
@@ -114,7 +110,6 @@ def q76_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full table — which is precisely what the oracle asserts."""
     out = jobs.run_to_memory(
         jobs.streaming_dedup(jobs.with_watermark(_stream(spark, sf_dir))),
-        f"q76_mem_{uuid.uuid4().hex[:8]}",
         output_mode="append",
     )
     return out.select("event_id", "user_id", "event_type", "value")
@@ -133,7 +128,6 @@ def q77_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch group-by — update-mode emissions collapsed by max."""
     out = jobs.run_to_memory(
         jobs.stateful_user_totals(jobs.with_watermark(_stream(spark, sf_dir))),
-        f"q77_mem_{uuid.uuid4().hex[:8]}",
         output_mode="update",
     )
     return out.groupBy("user_id").agg(F.max("events_seen").alias("events_seen"))
@@ -157,7 +151,6 @@ def q180_stream_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse by max (both counters are monotonic)."""
     out = jobs.run_to_memory(
         jobs.stateful_sequence_matcher(_stream(spark, sf_dir)),
-        f"q180_mem_{uuid.uuid4().hex[:8]}",
         output_mode="update",
     )
     return out.groupBy("user_id").agg(
@@ -189,7 +182,6 @@ def q122_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries without losing or duplicating pairs."""
     out = jobs.run_to_memory(
         jobs.stream_stream_attribution(_stream(spark, sf_dir)),
-        f"q122_mem_{uuid.uuid4().hex[:8]}",
         output_mode="append",
     )
     return out
@@ -235,7 +227,6 @@ def q146_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     included."""
     out = jobs.run_to_memory(
         jobs.stream_stream_attribution_outer(_stream(spark, sf_dir)),
-        f"q146_mem_{uuid.uuid4().hex[:8]}",
         output_mode="append",
     )
     ev = load_table(spark, sf_dir, "events")
@@ -264,7 +255,6 @@ def q77b_stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     gated path is exercised by the fail-loud pytest instead."""
     out = jobs.run_to_memory(
         jobs.stateful_user_totals_tws(jobs.with_watermark(_stream(spark, sf_dir))),
-        f"q77b_mem_{uuid.uuid4().hex[:8]}",
         output_mode="update",
     )
     return out.groupBy("user_id").agg(F.max("events_seen").alias("events_seen"))
@@ -321,9 +311,7 @@ def q194_stream_countmin_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stream(spark, sf_dir).select("user_id"), "user_id", 4, 1024,
         portable=True,
     )
-    return jobs.run_to_memory(
-        cells, f"q194_mem_{uuid.uuid4().hex[:8]}", output_mode="complete"
-    )
+    return jobs.run_to_memory(cells, output_mode="complete")
 
 
 @register(
@@ -396,7 +384,7 @@ def q256_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").cast("double").alias("n"),
         )
     )
-    mat = jobs.run_to_memory(counts, f"q256_mem_{uuid.uuid4().hex[:8]}")
+    mat = jobs.run_to_memory(counts)
     ref = (
         load_table(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -469,7 +457,6 @@ def q263_stream_static_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = jobs.run_to_memory(
         jobs.stream_static_join(_stream(spark, sf_dir), dim),
-        f"q263_mem_{uuid.uuid4().hex[:8]}",
         output_mode="append",
     )
     return out.select("event_id", "user_id", "event_type", "segment", "acctbal")
@@ -515,7 +502,6 @@ def q264_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     batch full join exactly."""
     out = jobs.run_to_memory(
         jobs.stream_stream_attribution_full(_stream(spark, sf_dir)),
-        f"q264_mem_{uuid.uuid4().hex[:8]}",
         output_mode="append",
     )
     ev = load_table(spark, sf_dir, "events")
@@ -675,7 +661,6 @@ SELECT user_id, COUNT(*) AS events_seen FROM events GROUP BY user_id
             jobs.stateful_user_totals_tws(
                 jobs.with_watermark(_stream(spark, sf_dir))
             ),
-            f"q286_mem_{uuid.uuid4().hex[:8]}",
             output_mode="update",
         )
         return out.groupBy("user_id").agg(
@@ -779,9 +764,7 @@ def q324_stream_bitmask_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     masks = s.groupBy("user_id").agg(
         F.expr("bit_or(m)").cast("bigint").alias("mask")
     )
-    out = jobs.run_to_memory(
-        masks, f"q324_mem_{uuid.uuid4().hex[:8]}", output_mode="complete"
-    )
+    out = jobs.run_to_memory(masks, output_mode="complete")
     return out.groupBy("mask").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_users")
     )
@@ -900,7 +883,7 @@ def q395_stream_ohlc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max_by("cents", "ok").cast("bigint").alias("close_cents"),
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
     )
-    out = jobs.run_to_memory(agg, f"q395_mem_{uuid.uuid4().hex[:8]}")
+    out = jobs.run_to_memory(agg)
     return out.select(
         F.col("w.start").cast("date").alias("day"),
         "event_type",

@@ -125,6 +125,20 @@ def _schema_of(df: DataFrame) -> list:
     return [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
 
 
+def _project(df: DataFrame, schema: list, *extra: str) -> DataFrame:
+    """``df`` as the declared ``schema`` ([[name, type], ...]) plus the
+    ``extra`` columns: a declared column the frame lacks (added after
+    it was written) reads NULL, a frame column the schema lacks
+    (dropped) is hidden."""
+    return df.select(
+        *[
+            F.col(name) if name in df.columns else F.lit(None).cast(typ).alias(name)
+            for name, typ in schema
+        ],
+        *extra,
+    )
+
+
 def _adds_rows_only(parent: Snapshot, snap: Snapshot) -> bool:
     """True when commit ``snap`` only adds rows to ``parent``: it drops
     none of the parent's files and adds no equality delete. Appends
@@ -335,19 +349,21 @@ class VersionedTable:
         except FileNotFoundError:
             raise VersioningError(
                 f"no snapshot v{version} in {self.root} "
-                f"(have: {[s.version for s in self.snapshots()]})"
+                f"(have: {self._versions()})"
             ) from None
+
+    def _versions(self) -> list[int]:
+        """The committed version numbers, ascending, from the
+        ``v<N>.json`` manifest names alone (no manifest is opened)."""
+        return sorted(
+            int(name[1:-5])
+            for name in os.listdir(self._meta)
+            if name.startswith("v") and name.endswith(".json")
+        )
 
     def snapshots(self) -> list[Snapshot]:
         """The snapshot log (Iceberg's ``<table>.snapshots`` analog)."""
-        return sorted(
-            (
-                self.snapshot(int(name[1:-5]))
-                for name in os.listdir(self._meta)
-                if name.startswith("v") and name.endswith(".json")
-            ),
-            key=lambda s: s.version,
-        )
+        return [self.snapshot(v) for v in self._versions()]
 
     def _resolve_version(
         self, version: int | None = None, as_of_timestamp: str | None = None
@@ -373,8 +389,8 @@ class VersionedTable:
         """Monotonic across rollback branches (Iceberg snapshot-id
         style): an abandoned snapshot's number is never reused, so its
         immutable data directory can't collide with a new commit."""
-        versions = [s.version for s in self.snapshots()]
-        return (max(versions) if versions else 0) + 1
+        versions = self._versions()
+        return (versions[-1] if versions else 0) + 1
 
     def _head(self, branch: str | None = None) -> Snapshot | None:
         """The snapshot a commit builds on: CURRENT on main, the branch
@@ -623,14 +639,7 @@ class VersionedTable:
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
         if snap.schema is not None:
-            out = out.select(
-                *[
-                    F.col(name)
-                    if name in out.columns
-                    else F.lit(None).cast(typ).alias(name)
-                    for name, typ in snap.schema
-                ]
-            )
+            out = _project(out, snap.schema)
         return out
 
     def alter_table(
@@ -1341,16 +1350,21 @@ class VersionedTable:
           Snapshot-diff deltas cannot distinguish updates from
           delete+insert pairs; captured merge changelogs do.
 
-        Insert images are read in ``to_version``'s namespace, as
-        ``changes`` reads them: renames, added columns (NULL for older
-        rows) and widens committed later in the window apply."""
+        Every image is read in ``to_version``'s namespace, as
+        ``changes`` reads rows: renames, added columns (NULL for older
+        rows) and widens committed later in the window apply to insert
+        images, snapshot diffs and captured changelogs alike."""
         base, lineage = self._window(from_version, to_version)
         head = lineage[-1] if lineage else base
-        # a commit's own equality deletes never cover the files it adds
-        # (a delete applies to strictly earlier eras), so insert images
-        # take only head's namespace; later deletes show as their own
-        # commits' delete images
-        insert_ns = replace(head, eq_deletes=[])
+
+        def at_head(eq_deletes: list, files: list[str]) -> DataFrame:
+            # ``files`` under head's names and types, filtered by the
+            # equality deletes of the snapshot they are read as. A
+            # commit's deletes never cover the files it adds (a delete
+            # applies to strictly earlier eras), so insert images pass
+            # none; later deletes show as their own commits' images.
+            return self._assemble(replace(head, eq_deletes=eq_deletes), files)
+
         base_cols = self._assemble(head).columns
         parts: list[DataFrame] = []
         for parent, snap in zip([base, *lineage], lineage):
@@ -1362,19 +1376,26 @@ class VersionedTable:
                 new_files = [f for f in snap.files if f not in parent_files]
                 if new_files:
                     parts.append(
-                        self._assemble(insert_ns, files=new_files)
+                        at_head([], new_files)
                         .withColumn("_change_type", F.lit("insert"))
                         .withColumn("_commit_version", cv)
                     )
                 continue
             if os.path.isdir(self._changelog_dir(snap.version)):
-                parts.append(
-                    self.spark.read.parquet(self._changelog_dir(snap.version))
-                    .withColumn("_commit_version", cv)
+                # captured at the commit's own names: replay the ALTERs
+                # committed after it
+                captured = self._replay_schema_ops(
+                    self.spark.read.parquet(self._changelog_dir(snap.version)),
+                    snap.version,
+                    head,
                 )
+                if head.schema is not None:
+                    captured = _project(captured, head.schema, "_change_type")
+                parts.append(captured.withColumn("_commit_version", cv))
                 continue
             # uncaptured rewrite: minimal snapshot diff (nets unchanged rows)
-            after, before = self._assemble(snap), self._assemble(parent)
+            after = at_head(snap.eq_deletes, snap.files)
+            before = at_head(parent.eq_deletes, parent.files)
             parts.append(
                 after.exceptAll(before)
                 .withColumn("_change_type", F.lit("insert"))

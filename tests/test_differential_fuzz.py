@@ -880,9 +880,7 @@ def test_watermark_drop_set_is_exact(spark, tmp_path, late_days, delay_h):
     agg = s.groupBy(F.window("ts", "1 hour").alias("w")).agg(
         F.sort_array(F.collect_list("event_id")).alias("ids")
     )
-    out = jobs.run_to_memory(
-        agg, f"dropset_{late_days}_{delay_h}", output_mode="append"
-    )
+    out = jobs.run_to_memory(agg, output_mode="append")
     got = {
         r.w.end.replace(tzinfo=None): list(r.ids) for r in out.collect()
     }

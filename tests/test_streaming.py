@@ -37,7 +37,7 @@ def test_stream_is_streaming(stream):
 
 def test_tumbling_stream_equals_batch(spark, stream):
     out = jobs.run_to_memory(
-        jobs.tumbling_agg(jobs.with_watermark(stream())), "t_tumbling"
+        jobs.tumbling_agg(jobs.with_watermark(stream()))
     )
     batch = all_specs()["q73_tumbling_window"].fn(spark, SF_DIR)
     cols = ["window_start", "event_type", "n_events", "total_value"]
@@ -46,7 +46,7 @@ def test_tumbling_stream_equals_batch(spark, stream):
 
 def test_sliding_stream_equals_batch(spark, stream):
     out = jobs.run_to_memory(
-        jobs.sliding_agg(jobs.with_watermark(stream())), "t_sliding"
+        jobs.sliding_agg(jobs.with_watermark(stream()))
     )
     batch = all_specs()["q74_sliding_window"].fn(spark, SF_DIR)
     cols = ["window_start", "n_events", "total_value"]
@@ -55,7 +55,7 @@ def test_sliding_stream_equals_batch(spark, stream):
 
 def test_session_stream_equals_batch(spark, stream):
     out = jobs.run_to_memory(
-        jobs.session_agg(jobs.with_watermark(stream())), "t_session"
+        jobs.session_agg(jobs.with_watermark(stream()))
     )
     batch = all_specs()["q75_session_window"].fn(spark, SF_DIR)
     cols = ["user_id", "session_start", "session_end", "n_events", "total_value"]
@@ -64,7 +64,7 @@ def test_session_stream_equals_batch(spark, stream):
 
 def test_streaming_dedup(spark, stream):
     out = jobs.run_to_memory(
-        jobs.streaming_dedup(jobs.with_watermark(stream())), "t_dedup",
+        jobs.streaming_dedup(jobs.with_watermark(stream())),
         output_mode="append",
     )
     n_unique = load_table(spark, SF_DIR, "events").select("event_id").distinct().count()
@@ -79,7 +79,7 @@ def test_stream_static_join(spark, stream):
         .agg(F.min("ts").alias("first_seen"))
     )
     out = jobs.run_to_memory(
-        jobs.stream_static_join(stream(), dim), "t_enrich", output_mode="append"
+        jobs.stream_static_join(stream(), dim), output_mode="append"
     )
     total = load_table(spark, SF_DIR, "events").count()
     assert out.count() == total
@@ -89,7 +89,6 @@ def test_stream_static_join(spark, stream):
 def test_stateful_user_totals(spark, stream):
     out = jobs.run_to_memory(
         jobs.stateful_user_totals(jobs.with_watermark(stream())),
-        "t_stateful",
         output_mode="update",
     )
     # update-mode memory sink keeps every microbatch's emission; the
@@ -136,11 +135,10 @@ def test_late_data_dropped_beyond_watermark(spark, tmp_path_factory):
             ).parquet(os.path.join(d, f"chunk={i}"))
         return d
 
-    def run(path, name):
+    def run(path):
         s = jobs.read_events_stream(spark, path)
         out = jobs.run_to_memory(
             jobs.tumbling_agg(jobs.with_watermark(s, "2 hours")),
-            name,
             output_mode="append",
         )
         return sorted(
@@ -148,10 +146,8 @@ def test_late_data_dropped_beyond_watermark(spark, tmp_path_factory):
             for r in out.collect()
         )
 
-    on_time = run(build("replay_ontime", [early, latest]), "t_late_a")
-    with_late = run(
-        build("replay_late", [early, latest, late_copies]), "t_late_b"
-    )
+    on_time = run(build("replay_ontime", [early, latest]))
+    with_late = run(build("replay_late", [early, latest, late_copies]))
     assert on_time == with_late, "late rows leaked past the watermark"
     assert len(on_time) > 0  # append mode emitted the closed windows
 
@@ -320,7 +316,6 @@ def test_stream_stream_join_equals_batch(spark, stream):
     nothing lost at chunk boundaries, no duplicates)."""
     got = jobs.run_to_memory(
         jobs.stream_stream_attribution(stream()),
-        "ssj_mem",
         output_mode="append",
     )
     ev = load_table(spark, SF_DIR, "events")
@@ -432,7 +427,7 @@ def test_progress_listener_captures_microbatch_telemetry(spark, replay_dir):
     from aws_iceberg_automation_spark.streaming import jobs
 
     sdf = jobs.tumbling_agg(jobs.with_watermark(jobs.read_events_stream(spark, replay_dir)))
-    out, progress = jobs.run_to_memory_with_metrics(sdf, "metrics_probe")
+    out, progress = jobs.run_to_memory_with_metrics(sdf)
     assert out.count() > 0
     data_batches = [p for p in progress if p.get("numInputRows", 0) > 0]
     assert len(data_batches) >= 2  # genuinely multi-microbatch
@@ -617,3 +612,81 @@ def test_versioned_upsert_precedence_beats_arrival_order(
     run(vt2, str(tmp_path_factory.mktemp("ck3")), newer, None)
     run(vt2, str(tmp_path_factory.mktemp("ck4")), older, None)
     assert [(r.user_id, r.event_id) for r in vt2.read().collect()] == [(1, 3)]
+
+
+def test_stream_width_pin_is_scoped_to_each_stream(spark, tmp_path):
+    """Every sink runs its stream at STREAM_STATE_PARTITIONS and hands
+    the session back at the session's own width, also when a
+    microbatch step raises."""
+    import datetime as dt
+    import json
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from aws_iceberg_automation_spark.io import SCHEMAS
+
+    key = "spark.sql.shuffle.partitions"
+    pinned = str(jobs.STREAM_STATE_PARTITIONS)
+    replay = str(tmp_path / "replay")
+    t0 = dt.datetime(2024, 1, 1)
+    for i in range(3):
+        rows = [
+            (i * 10 + j, t0 + dt.timedelta(hours=i, minutes=j), j % 3, "click", float(j), "{}")
+            for j in range(10)
+        ]
+        spark.createDataFrame(rows, SCHEMAS["events"]).coalesce(1).write.parquet(
+            os.path.join(replay, f"chunk={i}")
+        )
+
+    def stream():
+        return jobs.with_watermark(jobs.read_events_stream(spark, replay))
+
+    class Manager:
+        """foreach_batch_upsert's manager: records the width each
+        microbatch step runs at, or fails the step."""
+
+        def __init__(self, fail=False):
+            self.fail, self.widths = fail, []
+
+        def merge_upsert(self, table, df, on):
+            if self.fail:
+                raise RuntimeError("step failed")
+            self.widths.append(df.sparkSession.conf.get(key))
+
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        _, progress = jobs.run_to_memory_with_metrics(jobs.tumbling_agg(stream()))
+        widths = {
+            op["numShufflePartitions"]
+            for p in progress
+            for op in p.get("stateOperators", [])
+        }
+        assert widths == {jobs.STREAM_STATE_PARTITIONS}
+        assert spark.conf.get(key) == "3"
+
+        ckpt = str(tmp_path / "parquet_ckpt")
+        jobs.write_stream_parquet(
+            jobs.streaming_dedup(stream()), str(tmp_path / "out"), ckpt
+        )
+        # the offset log freezes the width the stream started with
+        with open(os.path.join(ckpt, "offsets", "0")) as f:
+            assert json.loads(f.read().splitlines()[1])["conf"][key] == pinned
+        assert spark.conf.get(key) == "3"
+
+        manager = Manager()
+        jobs.foreach_batch_upsert(
+            stream(), manager, "t", ["user_id"], str(tmp_path / "upsert_ckpt")
+        )
+        assert len(manager.widths) == 3 and set(manager.widths) == {pinned}
+        assert spark.conf.get(key) == "3"
+
+        with pytest.raises(StreamingQueryException, match="step failed"):
+            jobs.foreach_batch_upsert(
+                stream(), Manager(fail=True), "t", ["user_id"],
+                str(tmp_path / "fail_ckpt"),
+            )
+        assert spark.conf.get(key) == "3"
+    finally:
+        spark.conf.set(key, prev)

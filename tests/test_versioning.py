@@ -1393,3 +1393,54 @@ def test_branch_overwrite_declares_the_frames_schema(spark, vt):
     assert vt.snapshot(bv).schema == [["id", "bigint"], ["val", "string"]]
     assert vt.read_branch("b").dtypes == [("id", "bigint"), ("val", "string")]
     assert [(r.id, r.val) for r in vt.read_branch("b").collect()] == [(2, "x")]
+
+
+def test_commit_decodes_a_constant_number_of_manifests(spark, vt, monkeypatch):
+    """A commit finds its version number from the manifest names: the
+    10th commit decodes as many manifests as the 2nd (its parent's),
+    not one per earlier snapshot."""
+    decodes = []
+    decode = VersionedTable.snapshot
+
+    def counting(self, version):
+        decodes.append(version)
+        return decode(self, version)
+
+    monkeypatch.setattr(VersionedTable, "snapshot", counting)
+    per_commit = {}
+    for n in range(1, 11):
+        decodes.clear()
+        assert vt.write(_df(spark, n, n + 1)) == n
+        per_commit[n] = len(decodes)
+    assert per_commit[10] == per_commit[2] == 1
+
+
+# -- changelog in the head's namespace after a rewrite ---------------------
+
+
+def test_changelog_uncaptured_delete_then_rename(spark, vt):
+    vt.write(_df(spark, 0, 4))
+    vt.delete_where("id = 1")  # NOT captured → snapshot diff
+    vt.alter_table(renames={"v": "val"})
+    out = vt.changelog(1, 3)
+    assert out.columns == ["id", "val", "_change_type", "_commit_version"]
+    assert [
+        (r.id, r.val, r._change_type, r._commit_version) for r in out.collect()
+    ] == [(1, 10, "delete", 2)]
+
+
+def test_changelog_captured_merge_then_rename_and_add(spark, vt):
+    vt.write(_df(spark, 0, 3))
+    src = spark.createDataFrame([(2, 200), (5, 500)], "id long, v long")
+    vt.merge(src, on=["id"], capture_changelog=True)
+    vt.alter_table(renames={"v": "val"}, adds=["note string"])
+    out = vt.changelog(1, 3)
+    assert out.columns == ["id", "val", "note", "_change_type", "_commit_version"]
+    assert sorted(
+        (r._change_type, r.id, r.val, r.note, r._commit_version)
+        for r in out.collect()
+    ) == [
+        ("insert", 5, 500, None, 2),
+        ("update_after", 2, 200, None, 2),
+        ("update_before", 2, 20, None, 2),
+    ]
