@@ -103,7 +103,35 @@ class Measure:
             )
 
 
-class IncrementalAggView:
+class _RefreshTaggedView:
+    """What both views share: ``state`` is a ``VersionedTable`` whose
+    every refresh commit is tagged ``refresh:<source_version>[:mode]``
+    against the ``source`` table."""
+
+    source: VersionedTable
+    state: VersionedTable
+
+    def last_refreshed_source_version(self) -> int | None:
+        """Source version the stored state reflects (from snapshot
+        tags; ``op_log`` decodes only manifests committed since the
+        last lookup, so a refresh's lookup is constant-cost)."""
+        refreshed = [
+            int(op.split(":")[1])
+            for op in self.state.op_log()
+            if op.startswith("refresh:")
+        ]
+        return max(refreshed) if refreshed else None
+
+    def staleness(self) -> int:
+        """How many source versions behind the view is (0 = fresh)."""
+        cur = self.source.current_version()
+        last = self.last_refreshed_source_version()
+        if cur is None:
+            return 0
+        return cur if last is None else cur - last
+
+
+class IncrementalAggView(_RefreshTaggedView):
     def __init__(
         self,
         spark: SparkSession,
@@ -119,25 +147,6 @@ class IncrementalAggView:
         self.state = VersionedTable(spark, root)
         self.group_by = list(group_by)
         self.measures = list(measures)
-
-    # -- metadata ------------------------------------------------------
-
-    def last_refreshed_source_version(self) -> int | None:
-        """Source version the stored state reflects (from snapshot tags)."""
-        refreshed = [
-            int(s.op.split(":")[1])
-            for s in self.state.snapshots()
-            if s.op.startswith("refresh:")
-        ]
-        return max(refreshed) if refreshed else None
-
-    def staleness(self) -> int:
-        """How many source versions behind the view is (0 = fresh)."""
-        cur = self.source.current_version()
-        last = self.last_refreshed_source_version()
-        if cur is None:
-            return 0
-        return cur if last is None else cur - last
 
     # -- aggregation ---------------------------------------------------
 
@@ -534,7 +543,7 @@ class IncrementalAggView:
         )
 
 
-class IncrementalSessionView:
+class IncrementalSessionView(_RefreshTaggedView):
     """Incrementally-maintained gap-based SESSIONIZATION over an
     append-only ``VersionedTable`` of events — the non-aligned-window
     counterpart of ``IncrementalAggView`` (VERDICT r06 ask #4b: q272's
@@ -577,23 +586,6 @@ class IncrementalSessionView:
         self.ts_col = ts_col
         self.value_col = value_col
         self.gap_minutes = gap_minutes
-
-    # -- metadata (same contract as IncrementalAggView) ---------------
-
-    def last_refreshed_source_version(self) -> int | None:
-        refreshed = [
-            int(s.op.split(":")[1])
-            for s in self.state.snapshots()
-            if s.op.startswith("refresh:")
-        ]
-        return max(refreshed) if refreshed else None
-
-    def staleness(self) -> int:
-        cur = self.source.current_version()
-        last = self.last_refreshed_source_version()
-        if cur is None:
-            return 0
-        return cur if last is None else cur - last
 
     # -- sessionization ------------------------------------------------
 

@@ -594,9 +594,9 @@ def q294_matview_cdc_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     if mv.staleness() != 0:
         raise VersioningError(f"view ended stale: {mv.staleness()}")
     modes = [
-        s.op.rsplit(":", 1)[1]
-        for s in mv.state.snapshots()
-        if s.op.startswith("refresh:")
+        op.rsplit(":", 1)[1]
+        for op in mv.state.op_log()
+        if op.startswith("refresh:")
     ]
     if modes != ["full", "delta", "cdc", "cdc"]:
         raise VersioningError(

@@ -55,6 +55,22 @@ def build_session_builder(
     if profile == "local":
         b = b.master(f"local[{cpus}]")
         b = b.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # Write streaming checkpoints (offset, commit and file-source
+        # logs, state-store deltas and checksums) through the
+        # FileSystem API, not Spark's default FileContext one. Without
+        # native libhadoop, the local filesystem forks a `readlink`
+        # child process for every link-aware status, and the
+        # FileContext rename asks for one on both paths. On 4 cores
+        # (Java 17) this cut q76's state-store commits from 0.5-0.9 s
+        # to 15-60 ms per microbatch, and each offset/commit log write
+        # from 25-60 ms to 6-10 ms. On `file:` both managers rename
+        # check-then-move, refuse to overwrite an existing batch file,
+        # and keep checkpoint checksums on.
+        b = b.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     b = (
         b.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)

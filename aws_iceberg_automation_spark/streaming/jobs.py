@@ -24,7 +24,7 @@ between commit and checkpoint.
 
 Scale posture (100 TB/day): these plans are the standard production
 shapes — watermark-bounded state in per-key aggregates, dropDuplicates
-state keyed by event_id with the watermark bounding retention (#76),
+state keyed by (event_id, event time) so the watermark evicts it (#76),
 stream-static broadcast joins for dimension enrichment (#79), and an
 ``applyInPandasWithState`` Arrow-batched custom stateful operator
 (#77). Sinks: parquet/Iceberg append with checkpointing (#22).
@@ -245,8 +245,13 @@ def session_agg(events: DataFrame) -> DataFrame:
 
 def streaming_dedup(events: DataFrame) -> DataFrame:
     """Streaming dedup (#76): exactly-once on event_id with watermark-
-    bounded state (without the watermark, state grows unboundedly)."""
-    return events.dropDuplicates(["event_id"])
+    bounded state. The watermark column ``ts`` is part of the key —
+    Spark evicts a dedup key only once the watermark passes its event
+    time, so keyed on event_id alone the state would hold every id
+    ever seen. A redelivered row carries the same ``ts`` (truncated to
+    seconds by ``with_watermark``), so it still drops; one arriving
+    behind the watermark is dropped as late (#78)."""
+    return events.dropDuplicates(["event_id", "ts"])
 
 
 def stream_static_join(events: DataFrame, dim: DataFrame) -> DataFrame:
@@ -401,10 +406,15 @@ def _stream_state_partitions(spark: SparkSession):
     commits". Production sizes it to expected state volume/throughput
     (Spark's own guidance); here it is ``STREAM_STATE_PARTITIONS``.
     Measured on q122's stream-stream join at sf0.01 (5-microbatch
-    replay, local[32]): 32 partitions = 128 store instances whose
-    local-FS delta commits CONTEND — commitTimeMs 58 s summed, 16-21 s
-    wall — vs 8 partitions = 32 instances, 1.9 s commit, 4.7 s wall; 4
-    and 2 partitions give only 0.4-0.7 s more. The conf is restored
+    replay, local[32]): 32 partitions = 128 store instances, commitTimeMs
+    58 s summed, 16-21 s wall — vs 8 partitions = 32 instances, 1.9 s
+    commit, 4.7 s wall; 4 and 2 partitions give only 0.4-0.7 s more.
+    Those commits cost per checkpoint FILE, not per byte: without
+    native libhadoop every file the local filesystem creates forks a
+    ``chmod`` (and, through the FileContext checkpoint manager, a
+    ``readlink`` per link-aware status — the local session profile now
+    uses the FileSystem manager instead), so the commit wall scales
+    with the store count. The conf is restored
     after the query terminates, so batch plans in the same session keep
     the session's width (the hostile sweeps' overrides stay in force
     for everything except stream execution, which a real deployment
@@ -450,9 +460,10 @@ def _append_once(versioned, df: DataFrame, batch_id: int) -> None:
     """Append ``df`` to ``versioned`` as one snapshot tagged with
     ``batch_id``, unless that tag is already committed (a redelivered
     microbatch) — Iceberg's own streaming-sink exactly-once scheme.
-    Runs no Spark job of its own."""
+    Runs no Spark job of its own, and decodes no manifest the table
+    object has already seen (``op_log``)."""
     op = f"stream-append:{batch_id}"
-    if not any(s.op == op for s in versioned.snapshots()):
+    if op not in versioned.op_log():
         versioned.write(df, mode="append", _op=op)
 
 

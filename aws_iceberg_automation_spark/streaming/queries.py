@@ -105,9 +105,12 @@ SELECT event_id, user_id, event_type, value FROM events
     tags=("streaming",),
 )
 def q76_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming dropDuplicates with watermark-bounded state (#76):
-    event_ids are unique in the fixture, so exactly-once output equals
-    the full table — which is precisely what the oracle asserts."""
+    """Streaming dropDuplicates with watermark-bounded state (#76): the
+    dedup key carries the event time, so each key leaves the state once
+    the watermark passes it. event_ids are unique in the fixture and the
+    time-ordered replay delivers no row behind the watermark, so
+    exactly-once output equals the full table — which is precisely what
+    the oracle asserts."""
     out = jobs.run_to_memory(
         jobs.streaming_dedup(jobs.with_watermark(_stream(spark, sf_dir))),
         output_mode="append",
@@ -619,10 +622,10 @@ def q272_stream_lakehouse_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     if mv.staleness() != 0:
         raise RuntimeError(f"rollup ended stale: {mv.staleness()} versions behind")
     n_appends = sum(
-        1 for s in vt.snapshots() if s.op.startswith("stream-append:")
+        1 for op in vt.op_log() if op.startswith("stream-append:")
     )
     n_refresh = sum(
-        1 for s in mv.state.snapshots() if s.op.startswith("refresh:")
+        1 for op in mv.state.op_log() if op.startswith("refresh:")
     )
     if n_refresh != n_appends:
         raise RuntimeError(
@@ -714,10 +717,10 @@ def q290_stream_session_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     if sv.staleness() != 0:
         raise RuntimeError(f"session view ended stale: {sv.staleness()}")
     n_appends = sum(
-        1 for sn in vt.snapshots() if sn.op.startswith("stream-append:")
+        1 for op in vt.op_log() if op.startswith("stream-append:")
     )
     n_refresh = sum(
-        1 for sn in sv.state.snapshots() if sn.op.startswith("refresh:")
+        1 for op in sv.state.op_log() if op.startswith("refresh:")
     )
     if n_refresh != n_appends:
         raise RuntimeError(

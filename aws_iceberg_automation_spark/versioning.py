@@ -329,6 +329,9 @@ class VersionedTable:
         self.root = os.path.abspath(root.rstrip("/"))
         self._meta = os.path.join(self.root, "_versions")
         os.makedirs(self._meta, exist_ok=True)
+        # version -> op tag of every manifest this object has seen
+        # (``op_log``)
+        self._op_of: dict[int, str] = {}
 
     # -- metadata ------------------------------------------------------
 
@@ -364,6 +367,19 @@ class VersionedTable:
     def snapshots(self) -> list[Snapshot]:
         """The snapshot log (Iceberg's ``<table>.snapshots`` analog)."""
         return [self.snapshot(v) for v in self._versions()]
+
+    def op_log(self) -> list[str]:
+        """Every committed version's op tag, by ascending version: the
+        snapshot log's tags at the cost of the manifests committed since
+        the last call. A manifest never changes once written and expiry
+        always keeps the newest, so no version number is reused: each
+        manifest is decoded at most once per table object (never, when
+        this object committed it), and expired versions drop out."""
+        versions = self._versions()
+        for v in versions:
+            if v not in self._op_of:
+                self._op_of[v] = self.snapshot(v).op
+        return [self._op_of[v] for v in versions]
 
     def _resolve_version(
         self, version: int | None = None, as_of_timestamp: str | None = None
@@ -431,6 +447,7 @@ class VersionedTable:
             )
         with open(path, "w") as f:
             json.dump(manifest.__dict__, f)
+        self._op_of[version] = op
         self._move(branch, version)
         return version
 

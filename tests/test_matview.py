@@ -103,6 +103,35 @@ def test_rewrite_in_window_falls_back_to_rebuild(spark, view):
     assert mv.staleness() == 0
 
 
+def test_refresh_lookup_decodes_a_constant_number_of_manifests(
+    spark, view, monkeypatch
+):
+    """A refresh finds the source version its state reflects without
+    decoding the view's whole snapshot log: the 10th refresh decodes
+    as many manifests as the 2nd, and staleness() decodes none."""
+    src, mv = view
+    decodes = []
+    decode = VersionedTable.snapshot
+
+    def counting(self, version):
+        decodes.append(version)
+        return decode(self, version)
+
+    monkeypatch.setattr(VersionedTable, "snapshot", counting)
+    per_refresh = {}
+    for n in range(1, 11):
+        src.write(_rows(spark, n * 10, n * 10 + 10), mode="append")
+        decodes.clear()
+        mv.refresh()
+        per_refresh[n] = len(decodes)
+        decodes.clear()
+        assert mv.staleness() == 0
+        assert decodes == []
+    assert per_refresh[10] == per_refresh[2]
+    assert mv.last_refreshed_source_version() == src.current_version() == 10
+    assert _got(mv) == _expect(spark, src)
+
+
 def test_streaming_ingest_feeds_incremental_view(spark, tmp_path):
     """End-to-end ingest→rollup: day-by-day appends into a versioned
     table (the shape the exactly-once streaming sink commits), each

@@ -5,10 +5,14 @@ key-for-key (reference ``create_iceberg_tables.py:120-131``: Glue
 catalog + S3FileIO + warehouse + DynamoDB lock manager/table + Iceberg
 SQL extensions + default catalog + Hive support).  No AWS or Iceberg
 JARs are needed: we assemble the builder and read the accumulated
-options without ever calling ``getOrCreate()``.
+options without ever calling ``getOrCreate()``. One test checks the
+local profile's streaming checkpoint manager on the live test session
+(no fixture data).
 """
 
 from __future__ import annotations
+
+import pytest
 
 from aws_iceberg_automation_spark.session import build_session_builder
 
@@ -64,3 +68,44 @@ def test_both_profiles_size_the_codegen_cache() -> None:
     for profile in ("local", "cloud"):
         opts = _options(build_session_builder(profile=profile))
         assert opts.get("spark.sql.codegen.cache.maxEntries") == "1024", profile
+
+
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def test_local_profile_checkpoints_through_the_filesystem_manager() -> None:
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert _options(build_session_builder(profile="local"))[key] == _FS_CHECKPOINT_MANAGER
+    assert key not in _options(build_session_builder(profile="cloud"))
+
+
+def test_live_checkpoint_manager_refuses_to_overwrite_a_batch_file(spark, tmp_path) -> None:
+    """The running session resolves the FileSystem-based manager (this
+    fails loudly if a Spark upgrade moves its package again), and a
+    second atomic write of an existing checkpoint file is refused on
+    close with the first content kept."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    root = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "ckpt"))
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        root, conf
+    )
+    assert manager.getClass().getName() == _FS_CHECKPOINT_MANAGER
+
+    manager.mkdirs(root)
+    batch = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "ckpt" / "0"))
+    out = manager.createAtomic(batch, False)
+    out.write(b"first")
+    out.close()
+    again = manager.createAtomic(batch, False)
+    again.write(b"second")
+    with pytest.raises(Py4JJavaError) as err:
+        again.close()
+    exists = jvm.java.lang.Class.forName("org.apache.hadoop.fs.FileAlreadyExistsException")
+    assert exists.isInstance(err.value.java_exception)
+    assert (tmp_path / "ckpt" / "0").read_bytes() == b"first"

@@ -31,6 +31,20 @@ def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
+def _write_replay(spark, root, chunks) -> str:
+    """Write each list of events rows as one replay chunk
+    (``chunk=<i>``), in order; no fixture data needed."""
+    import os
+
+    from aws_iceberg_automation_spark.io import SCHEMAS
+
+    for i, rows in enumerate(chunks):
+        spark.createDataFrame(rows, SCHEMAS["events"]).coalesce(1).write.parquet(
+            os.path.join(root, f"chunk={i}")
+        )
+    return root
+
+
 def test_stream_is_streaming(stream):
     assert stream().isStreaming
 
@@ -624,20 +638,16 @@ def test_stream_width_pin_is_scoped_to_each_stream(spark, tmp_path):
 
     from pyspark.errors import StreamingQueryException
 
-    from aws_iceberg_automation_spark.io import SCHEMAS
-
     key = "spark.sql.shuffle.partitions"
     pinned = str(jobs.STREAM_STATE_PARTITIONS)
-    replay = str(tmp_path / "replay")
     t0 = dt.datetime(2024, 1, 1)
-    for i in range(3):
-        rows = [
+    replay = _write_replay(spark, str(tmp_path / "replay"), [
+        [
             (i * 10 + j, t0 + dt.timedelta(hours=i, minutes=j), j % 3, "click", float(j), "{}")
             for j in range(10)
         ]
-        spark.createDataFrame(rows, SCHEMAS["events"]).coalesce(1).write.parquet(
-            os.path.join(replay, f"chunk={i}")
-        )
+        for i in range(3)
+    ])
 
     def stream():
         return jobs.with_watermark(jobs.read_events_stream(spark, replay))
@@ -690,3 +700,65 @@ def test_stream_width_pin_is_scoped_to_each_stream(spark, tmp_path):
         assert spark.conf.get(key) == "3"
     finally:
         spark.conf.set(key, prev)
+
+
+def test_streaming_dedup_state_is_bounded_by_the_watermark(spark, tmp_path):
+    """#76: dedup state is evicted once the watermark passes a key's
+    event time — the last microbatch holds under half the rows the
+    stream read and has removed some — while a redelivered row (same
+    event_id, same ts) in a later microbatch is still dropped."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    chunks = [
+        [
+            (i * 10 + j, t0 + dt.timedelta(hours=3 * i, minutes=j), j, "click", float(j), "{}")
+            for j in range(10)
+        ]
+        for i in range(5)
+    ]
+    chunks[2].append(chunks[1][4])  # redelivered inside the watermark
+    replay = _write_replay(spark, str(tmp_path / "replay"), chunks)
+    out, progress = jobs.run_to_memory_with_metrics(
+        jobs.streaming_dedup(
+            jobs.with_watermark(jobs.read_events_stream(spark, replay))
+        ),
+        output_mode="append",
+    )
+    assert out.count() == out.select("event_id").distinct().count() == 50
+    n_read = sum(p["numInputRows"] for p in progress)
+    assert n_read == 51
+    last = [p["stateOperators"][0] for p in progress if p.get("stateOperators")][-1]
+    assert last["numRowsTotal"] < n_read // 2
+    assert last["numRowsRemoved"] > 0
+
+
+def test_append_once_decodes_a_constant_number_of_manifests(spark, tmp_path, monkeypatch):
+    """The exactly-once check of a microbatch append finds its tag
+    without decoding the table's whole snapshot log: the 10th
+    microbatch decodes as many manifests as the 2nd (the parent the
+    commit builds on), and a redelivered microbatch decodes none and
+    commits nothing."""
+    from aws_iceberg_automation_spark.versioning import VersionedTable
+
+    vt = VersionedTable(spark, str(tmp_path / "vt"))
+    decodes = []
+    decode = VersionedTable.snapshot
+
+    def counting(self, version):
+        decodes.append(version)
+        return decode(self, version)
+
+    monkeypatch.setattr(VersionedTable, "snapshot", counting)
+    per_batch = {}
+    for batch_id in range(10):
+        decodes.clear()
+        jobs._append_once(vt, spark.range(batch_id * 3, batch_id * 3 + 3), batch_id)
+        per_batch[batch_id] = len(decodes)
+    assert per_batch[9] == per_batch[1] == 1
+    decodes.clear()
+    jobs._append_once(vt, spark.range(100, 103), 4)
+    assert decodes == []
+    assert vt.current_version() == 10
+    assert vt.read().count() == 30
+    assert vt.op_log() == [f"stream-append:{b}" for b in range(10)]
