@@ -53,6 +53,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.compat import cms_bucket, portable_hash64
 from .versioning import VersionedTable, VersioningError
 
 _KINDS = (
@@ -153,9 +154,10 @@ class IncrementalAggView(_RefreshTaggedView):
     @staticmethod
     def _cms_slot(item: Column, seed: Column, width: int) -> Column:
         """Flat cell index of ``item`` under ``seed``: seed·width +
-        h_seed(item) mod width — the same layout the build, the merge
-        and the point query all address."""
-        return seed.cast("bigint") * width + F.pmod(F.xxhash64(item, seed), width)
+        cms_bucket(item, seed, width) — the same layout the build, the
+        merge and the point query all address, on the one Count-Min hash
+        the text operators use."""
+        return seed.cast("bigint") * width + cms_bucket(item, seed, width)
 
     def _cms_partial(self, df: DataFrame, m: Measure) -> DataFrame:
         """Per-group CMS cell array over ``df``: explode each row into
@@ -164,10 +166,10 @@ class IncrementalAggView(_RefreshTaggedView):
         at most depth·width distinct slots per group regardless of
         input size, the bounded-state property that makes the sketch a
         view measure."""
-        # NULL items are excluded from the sketch (xxhash64 over NULL
-        # would land them in real cells that cms_point_estimate — which
-        # drops NULL probes — could never query back: pure over-count
-        # noise). explode_outer + the NULL guard keeps a group whose
+        # NULL items are excluded from the sketch (cms_point_estimate
+        # drops NULL probes, so their counts could never be queried
+        # back: any cell they touched would be pure over-count noise).
+        # explode_outer + the NULL guard keeps a group whose
         # items are ALL NULL present with an all-zero cell array, so
         # _partial's identical-group-sets inner-join invariant holds.
         slots = F.explode_outer(
@@ -216,8 +218,6 @@ class IncrementalAggView(_RefreshTaggedView):
         collects more than 64·k rows no matter the group size; the
         final collect_list sees ≤ k rows per group."""
         from pyspark.sql import Window
-
-        from .functions.compat import portable_hash64
 
         k = m.sample_size
         base = df.select(
@@ -492,19 +492,19 @@ class IncrementalAggView(_RefreshTaggedView):
         )
         if m is None:
             raise ValueError(f"no countmin measure named {alias!r}")
-        # xxhash64 is TYPE-sensitive (xxhash64(5) != xxhash64('5')):
-        # coerce probes to the measure expression's resolved type so a
-        # string-probe-against-int-build can't silently address wrong
-        # cells and break the one-sided bound. Resolving the type is a
-        # schema-only read of the source, no job.
+        # The cell hash reads the item's string form, which depends on
+        # its type (5 and 5.0 hash apart): coerce probes to the measure
+        # expression's resolved type so a probe of another type can't
+        # silently address wrong cells and break the one-sided bound.
+        # Resolving the type is a schema-only read of the source, no job.
         build_type = (
             self.source.read().select(m.expr.alias("_t")).schema[0].dataType
         )
         # try_cast (never ANSI-throwing) + eager validation: a probe
         # that can't coerce to the build type would otherwise become
-        # NULL and estimate xxhash64(NULL)'s cells — a frequency for an
-        # item that was never counted. Probes are a tiny shortlist, so
-        # the validation count is a broadcast-sized job.
+        # NULL and be dropped without a word — a missing estimate for
+        # an item the caller asked about. Probes are a tiny shortlist,
+        # so the validation count is a broadcast-sized job.
         coerced = probes.select(
             F.col(item_col).alias("_raw"),
             F.col(item_col).try_cast(build_type).alias("_item"),

@@ -1,11 +1,14 @@
 """Deduplication operators (SURVEY.md §2.11 #81-82) — exact, MinHash+LSH,
 SimHash, n-gram Jaccard, embedding-cosine near-dup.
 
-Everything is built-in JVM expressions (higher-order array functions +
-xxhash64); no Python boundary, no MLlib model fitting — the signature
-computation is a pure map, so it scales linearly and shuffles only
-(band_hash → bucket) pairs, never full signatures of all docs to one
-place.
+Everything is built-in JVM expressions (higher-order array functions
+over the one sketch hash, ``functions/compat.portable_hash64``); no
+Python boundary, no MLlib model fitting — the signature computation is
+a pure map, so it scales linearly and shuffles only (band_hash →
+bucket) pairs, never full signatures of all docs to one place. Every
+hash site (base shingle hashes, band hashes, bucket-cap salt) is one
+DuckDB can recompute, so each LSH query's oracle re-derives the whole
+pipeline.
 
 Shapes at 100 TB:
 - exact: groupBy(sha256) with min-id winner — one shuffle of (hash, id).
@@ -34,7 +37,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.compat import split_bucket, sql_portable_hash64, sql_split_bucket
+from ..functions.compat import (
+    portable_hash64,
+    split_bucket,
+    sql_portable_hash64,
+    sql_split_bucket,
+)
 from ..io import load_table, rebalance_if_undersplit
 from ..functions.ckpt import checkpoint_df
 from ..registry import register
@@ -53,46 +61,33 @@ def word_shingles(text: str | Column, k: int = 3) -> Column:
     return F.array_distinct(grams)
 
 
-def _hash64(item: Column, portable: bool) -> Column:
-    if portable:
-        from ..functions.compat import portable_hash64
-
-        return portable_hash64(item)
-    return F.xxhash64(item)
-
-
 _MH_P = 2147483647  # 2^31 - 1 (prime): universal-hash modulus
 _MH_A = 2654435761  # Knuth multiplicative constant
 _MH_B = 40503
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature (production path): per permutation h, min over
-    shingles of xxhash64(s, h) — one cheap JVM hash each. One array
-    column — no N×H explosion, no shuffle. For the oracle-checkable
-    portable variant there is deliberately NO flag here: project the
-    md5 base hashes as their own column and call
-    :func:`minhash_from_base_hashes` (see its docstring for why
-    inlining would 32× the digest cost)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda h: F.array_min(
-            F.transform(shingles, lambda s: F.xxhash64(s, h))
-        ),
+def _with_base_hashes(df: DataFrame, shingle_col: str) -> DataFrame:
+    """``df`` plus ``_hm``: each shingle's portable hash mod P, the base
+    array :func:`minhash_from_base_hashes` permutes. It is projected as
+    its OWN column on purpose — see that function's docstring for why
+    inlining it would re-digest every shingle once per permutation."""
+    return df.withColumn(
+        "_hm", F.transform(shingle_col, lambda s: portable_hash64(s) % _MH_P)
     )
 
 
 def minhash_from_base_hashes(base: Column, num_hashes: int = 32) -> Column:
-    """The permutation half of the portable (oracle-checkable) MinHash:
+    """The permutation half of the MinHash signature:
     signature from an ALREADY-HASHED shingle array (values in [0, P)),
     via the universal family h_i(m) = (a_i·m + b_i) mod P with
     P = 2^31-1 and a_i = (i+1)·A mod P — exact int64 arithmetic
     (products < 2^62, never overflow) that DuckDB reproduces literally.
     Callers MUST materialize the base-hash array as its own projected
-    column first — expression CSE does not reach across lambda scopes,
-    so inlining the md5 map here would re-digest every shingle once per
-    permutation (measured 32×: 3.1s vs 0.4s for the base map at
-    sf0.1). Projecting alone is NOT enough (round-7 20× probe catch):
+    column first (:func:`_with_base_hashes`) — expression CSE does not
+    reach across lambda scopes, so inlining the md5 map here would
+    re-digest every shingle once per permutation (measured 32×: 3.1s
+    vs 0.4s for the base map at sf0.1). Projecting alone is NOT enough
+    (round-7 20× probe catch):
     when the signature is consumed projection-shaped (Project over
     Project, e.g. q321's census — generator-shaped plans like q82's
     explode are safe), CollapseProject sees the base alias referenced
@@ -121,18 +116,15 @@ def minhash_from_base_hashes(base: Column, num_hashes: int = 32) -> Column:
     )
 
 
-def lsh_bands(
-    sig: Column, bands: int = 8, rows: int = 4, portable: bool = False
-) -> Column:
+def lsh_bands(sig: Column, bands: int = 8, rows: int = 4) -> Column:
     """Band the signature: array of (band_id, band_hash) structs. Two
     docs sharing any band bucket become a candidate pair."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda b: F.struct(
             b.alias("band"),
-            _hash64(
-                F.concat_ws(",", F.transform(F.slice(sig, b * rows + 1, rows), lambda x: x.cast("string"))),
-                portable,
+            portable_hash64(
+                F.concat_ws(",", F.transform(F.slice(sig, b * rows + 1, rows), lambda x: x.cast("string")))
             ).alias("band_hash"),
         ),
     )
@@ -192,7 +184,6 @@ def _lsh_candidate_pairs_frame(
     num_hashes: int = 32,
     bands: int = 8,
     bucket_cap: int = 64,
-    portable: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Candidate-generation half of the MinHash-LSH pipeline: returns
     ``(cand, sh)`` — distinct candidate pairs (doc_id_a < doc_id_b)
@@ -225,9 +216,7 @@ def _lsh_candidate_pairs_frame(
     sh = docs.select(
         "doc_id", word_shingles(F.col("text"), k).alias("shingles")
     )
-    banded = _banded_postings(
-        sh, "doc_id", "shingles", num_hashes, bands, rows, portable
-    )
+    banded = _banded_postings(sh, "doc_id", "shingles", num_hashes, bands, rows)
     # The banded frame feeds the size count, the salt join AND both
     # sides of the candidate self-join — four lineage paths through the
     # expensive signature map (num_hashes hashes per shingle per doc).
@@ -250,12 +239,9 @@ def _lsh_candidate_pairs_frame(
         F.when(F.col("bucket_size") <= bucket_cap, F.lit(0).cast("bigint"))
         .otherwise(
             F.pmod(
-                _hash64(
-                    F.concat(F.lit("lsh-salt:"), F.col("doc_id").cast("string")),
-                    portable,
-                )
-                if portable
-                else F.xxhash64(F.col("doc_id"), F.lit("lsh-salt")),
+                portable_hash64(
+                    F.concat(F.lit("lsh-salt:"), F.col("doc_id").cast("string"))
+                ),
                 n_groups,
             )
         )
@@ -285,15 +271,12 @@ def minhash_candidate_pairs(
     bands: int = 8,
     threshold: float = 0.5,
     bucket_cap: int = 64,
-    portable: bool = False,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline over (doc_id, text): returns
     verified pairs (doc_id_a < doc_id_b, jaccard ≥ threshold) — the
     cap-salted candidate generation (see _lsh_candidate_pairs_frame)
     followed by the exact-Jaccard verify join."""
-    cand, sh = _lsh_candidate_pairs_frame(
-        docs, k, num_hashes, bands, bucket_cap, portable
-    )
+    cand, sh = _lsh_candidate_pairs_frame(docs, k, num_hashes, bands, bucket_cap)
     sa = sh.select(F.col("doc_id").alias("doc_id_a"), F.col("shingles").alias("sh_a"))
     sb = sh.select(F.col("doc_id").alias("doc_id_b"), F.col("shingles").alias("sh_b"))
     jac = jaccard(F.col("sh_a"), F.col("sh_b"))
@@ -310,8 +293,6 @@ def minhash_candidate_pairs(
         )
     )
 
-
-_PH = "CAST('0x' || substring(md5({0}), 1, 15) AS BIGINT)"
 
 # Shared shingle→MinHash→banding CTE chain (the DuckDB re-derivation of
 # minhash_from_base_hashes + lsh_bands on the portable hash family).
@@ -331,7 +312,7 @@ def _minhash_ctes(src: str = "documents") -> str:
   FROM tok
 ), base AS (
   SELECT doc_id, shingles,
-         list_transform(shingles, s -> {_PH.format("s")} % 2147483647) AS hm
+         list_transform(shingles, s -> {sql_portable_hash64("s")} % 2147483647) AS hm
   FROM sh
 ), sig AS (
   SELECT doc_id, list_transform(range(0, 32),
@@ -341,7 +322,7 @@ def _minhash_ctes(src: str = "documents") -> str:
   FROM base
 ), banded AS (
   SELECT doc_id, b AS band,
-    {_PH.format(
+    {sql_portable_hash64(
         "array_to_string(list_transform("
         "list_slice(sig, b * 4 + 1, b * 4 + 4), x -> CAST(x AS VARCHAR)), ',')"
     )} AS band_hash
@@ -359,7 +340,7 @@ _CAND_CTES = f"""sizes AS (
 ), salted AS (
   SELECT doc_id, band, band_hash,
     CASE WHEN bucket_size <= 64 THEN 0
-         ELSE {_PH.format("('lsh-salt:' || CAST(doc_id AS VARCHAR))")}
+         ELSE {sql_portable_hash64("('lsh-salt:' || CAST(doc_id AS VARCHAR))")}
               % CAST(ceil(bucket_size / 64.0) AS BIGINT) END AS salt
   FROM banded JOIN sizes USING (band, band_hash)
 ), cand AS (
@@ -392,12 +373,8 @@ def q82_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold 0.5 — is re-derived by DuckDB on the portable md5 hash
     family, so the driver hash-checks the flagship dedup operator end
     to end (the fixture corpus carries genuine near-dups at every sf:
-    28/25/256 verified pairs at sf0.001/0.01/0.1). Production swaps
-    xxhash64 per hash site (``portable=False``, the default) — banding
-    probability and the bucket-cap work bound are hash-independent."""
-    return minhash_candidate_pairs(
-        load_table(spark, sf_dir, "documents"), portable=True
-    )
+    28/25/256 verified pairs at sf0.001/0.01/0.1)."""
+    return minhash_candidate_pairs(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -469,9 +446,7 @@ def q82c_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-derived hash (functions/compat.portable_hash64) so DuckDB
     recomputes the identical signature bit-for-bit (sum of disjoint
     bit values = OR; the ±1 fold is order-independent, so Spark's
-    expression fold and DuckDB's grouped SUM agree exactly). Production
-    swaps xxhash64 per token — SimHash locality holds for any
-    well-mixing 64-bit hash."""
+    expression fold and DuckDB's grouped SUM agree exactly)."""
     d = load_table(spark, sf_dir, "documents")
     # SQL-expression form: the Python shiftleft/shiftright wrappers only
     # take literal ints, but the SQL functions accept expressions — which
@@ -712,48 +687,23 @@ def _banded_postings(
     num_hashes: int,
     bands: int,
     rows: int,
-    portable: bool,
 ) -> DataFrame:
     """(id, band, band_hash) postings from a (id, shingles) frame —
     the shared banding step of the one-shot pipeline, the persistable
-    index build and the incremental crawl. Portable signatures project
-    the base-hash array first (see minhash_from_base_hashes).
+    index build and the incremental crawl. The base-hash array is
+    projected first (see minhash_from_base_hashes).
 
     Undersplit guard lives HERE so every caller gets it (round-7
     full-registry probe: q131/q288 banded their batch straight off a
     4-file fixture scan and serialized the md5 stage on 4 of 32 cores
     — the same catch q321 and _lsh_candidate_pairs_frame had already
-    fixed locally). The guard reads ``inputFiles()`` — pure plan
-    metadata — NOT ``.rdd.getNumPartitions()``: under AQE, ``.rdd`` on
-    a frame with upstream shuffles eagerly EXECUTES those stages and
-    throws the work away when the frame is re-used as a DataFrame
-    (ADVICE r7). Scan-shaped callers (every current one) get the same
-    behavior: few fixture files → spread before the signature map.
-    Non-scan frames (``inputFiles()`` empty) skip the guard — their
-    upstream shuffle already wrote spark.sql.shuffle.partitions
-    splits, so a forced repartition would only add an exchange. At
-    real scale the file set splits naturally and the branch never
-    fires."""
-    par = sh.sparkSession.sparkContext.defaultParallelism
-    try:
-        n_files = len(sh.inputFiles())
-    except Exception:  # non-file-backed plan (e.g. in-memory fixture)
-        n_files = par
-    if 0 < n_files < par:
-        # hash on the id, not round-robin: keyless repartition pays a
-        # hidden local sort of the full rows first (guide §2.5, r10)
-        sh = sh.repartition(par, F.col(id_col))
-    if portable:
-        from ..functions.compat import portable_hash64
-
-        sig = minhash_from_base_hashes(F.col("_hm"), num_hashes)
-        signed = sh.withColumn(
-            "_hm",
-            F.transform(shingle_col, lambda s: portable_hash64(s) % _MH_P),
-        )
-    else:
-        sig = minhash_signature(F.col(shingle_col), num_hashes)
-        signed = sh
+    fixed locally). It is the shared ``io.rebalance_if_undersplit``,
+    hash-keyed on the id: few fixture files → spread before the
+    signature map. _lsh_candidate_pairs_frame also guards its scan, so
+    the shingles are computed after the spread; the two repartitions
+    plan as one exchange."""
+    sh = rebalance_if_undersplit(sh, F.col(id_col))
+    sig = minhash_from_base_hashes(F.col("_hm"), num_hashes)
     # r10: materialize the signature as its OWN projected column before
     # the banding explode. Inlined, the whole num_hashes-permutation
     # map sits inside lsh_bands' per-band lambda (slice(sig, ...)) and
@@ -765,13 +715,9 @@ def _banded_postings(
     # "generator-shaped plans are safe" property this module already
     # documents.
     return (
-        signed.select(id_col, sig.alias("_sig"))
-        .select(
-            id_col,
-            F.explode(
-                lsh_bands(F.col("_sig"), bands, rows, portable)
-            ).alias("b"),
-        )
+        _with_base_hashes(sh, shingle_col)
+        .select(id_col, sig.alias("_sig"))
+        .select(id_col, F.explode(lsh_bands(F.col("_sig"), bands, rows)).alias("b"))
         .select(id_col, "b.band", "b.band_hash")
     )
 
@@ -782,7 +728,6 @@ def build_lsh_index(
     num_hashes: int = 32,
     bands: int = 8,
     bucket_cap: int = 64,
-    portable: bool = False,
 ) -> DataFrame:
     """Persistable MinHash-LSH index over (doc_id, text): one row per
     (doc_id, band, band_hash) posting. The incremental-crawl contract:
@@ -802,9 +747,7 @@ def build_lsh_index(
     sh = docs.select(
         "doc_id", word_shingles(F.col("text"), k).alias("shingles")
     )
-    banded = _banded_postings(
-        sh, "doc_id", "shingles", num_hashes, bands, rows, portable
-    )
+    banded = _banded_postings(sh, "doc_id", "shingles", num_hashes, bands, rows)
     from ..functions.ranking import cap_groups
 
     return cap_groups(banded, ["band", "band_hash"], [F.col("doc_id")], bucket_cap)
@@ -818,7 +761,6 @@ def incremental_neardup(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    portable: bool = False,
 ) -> DataFrame:
     """Dedup a new batch against an indexed corpus: band the new docs
     (map-side), equi-join their postings against the stored index on
@@ -837,7 +779,7 @@ def incremental_neardup(
         word_shingles(F.col("text"), k).alias("new_sh"),
     )
     new_banded = _banded_postings(
-        new_sh, "new_doc_id", "new_sh", num_hashes, bands, rows, portable
+        new_sh, "new_doc_id", "new_sh", num_hashes, bands, rows
     )
     cand = (
         new_banded.join(corpus_index, ["band", "band_hash"])
@@ -934,8 +876,8 @@ def q131_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") < 400)
     batch = d.filter(F.col("doc_id") >= 400)
-    idx = build_lsh_index(corpus, portable=True)
-    return incremental_neardup(idx, corpus, batch, portable=True)
+    idx = build_lsh_index(corpus)
+    return incremental_neardup(idx, corpus, batch)
 
 
 @register(
@@ -1182,7 +1124,7 @@ def q167_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver hash-checks cluster membership exactly. pytest separately
     asserts injected duplicate clusters surface intact."""
     d = load_table(spark, sf_dir, "documents")
-    comp = connected_components(minhash_candidate_pairs(d, portable=True))
+    comp = connected_components(minhash_candidate_pairs(d))
     return comp.groupBy("component_id").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.min("doc_id").alias("keeper_doc_id"),
@@ -1438,7 +1380,7 @@ def q187_dedup_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cache()
     )
     detected = (
-        minhash_candidate_pairs(corpus, threshold=0.5, portable=True)
+        minhash_candidate_pairs(corpus, threshold=0.5)
         .select("doc_id_a", "doc_id_b")
         .cache()
     )
@@ -1503,9 +1445,7 @@ def q207_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side md5 gates on the pair frame, and the final agg is ≤6
     rows. Oracle: composes the SAME shared MinHash CTE fragment and
     the SAME split-rule fragment — neither boundary can drift."""
-    pairs = minhash_candidate_pairs(
-        load_table(spark, sf_dir, "documents"), portable=True
-    )
+    pairs = minhash_candidate_pairs(load_table(spark, sf_dir, "documents"))
     lab = pairs.select(
         "jaccard",
         split_bucket("doc_id_a").alias("split_a"),
@@ -1564,8 +1504,7 @@ def q243_duplicate_ngram_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     tells you which ingestion pipeline is re-crawling boilerplate.
 
     Plan shape: grams leave the scan as 8-byte portable hashes (60-bit
-    md5 prefix — the oracle-checkable stand-in for xxhash64 at
-    production scale; collision odds over even 10^12 grams stay
+    md5 prefix; collision odds over even 10^12 grams stay
     ~5e-7 per q71b's analysis), so the corpus-wide shuffle moves
     (hash, doc_id, source) triples, never gram text. Two hash aggs —
     distinct-doc count per gram, occurrence count per (source, gram) —
@@ -1575,8 +1514,6 @@ def q243_duplicate_ngram_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash shingle stage (dedup.py:129) already pays. Docs shorter
     than 5 words contribute no grams on either engine (empty
     generate_series / guarded sequence)."""
-    from ..functions.compat import portable_hash64
-
     d = load_table(spark, sf_dir, "documents")
     words = d.select(
         "doc_id", "source", F.split("text", " ").alias("w")
@@ -1819,8 +1756,6 @@ def q262_positional_dup_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDENTICAL expression form on both engines — an exact-input double
     comparison that cannot drift."""
     d = load_table(spark, sf_dir, "documents")
-    from ..functions.compat import portable_hash64
-
     words = d.select("doc_id", F.split("text", " ").alias("w")).filter(
         F.size("w") >= 5
     )
@@ -1896,14 +1831,9 @@ def q268_minhash_estimator_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded candidate set. sig_agree/32 is exact in binary (5-bit
     fraction) and exact J is a single correctly-rounded division, so
     the boolean is engine-identical."""
-    from ..functions.compat import portable_hash64
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    cand, sh = _lsh_candidate_pairs_frame(docs, portable=True)
-    sigf = sh.withColumn(
-        "_hm",
-        F.transform("shingles", lambda s: portable_hash64(s) % _MH_P),
-    ).select(
+    cand, sh = _lsh_candidate_pairs_frame(docs)
+    sigf = _with_base_hashes(sh, "shingles").select(
         "doc_id",
         minhash_from_base_hashes(F.col("_hm"), 32).alias("sig"),
         "shingles",
@@ -1975,7 +1905,7 @@ def q269_crawl_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     RAW max ratio (exact division, engine-identical) and rounds only
     for display."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    cand, sh = _lsh_candidate_pairs_frame(docs, portable=True)
+    cand, sh = _lsh_candidate_pairs_frame(docs)
     sa = sh.select(F.col("doc_id").alias("doc_id_a"), F.col("shingles").alias("sh_a"))
     sb = sh.select(F.col("doc_id").alias("doc_id_b"), F.col("shingles").alias("sh_b"))
     jac = jaccard(F.col("sh_a"), F.col("sh_b"))
@@ -2060,8 +1990,6 @@ def q285_doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     collisions = cap_groups on the anchor buckets (the q82 LSH
     bucket-cap discipline); the fixture's families are edit-dup
     sized, so the uncapped form is what the oracle replays."""
-    from ..functions.compat import portable_hash64
-
     d = load_table(spark, sf_dir, "documents")
     words = d.select("doc_id", F.split("text", " ").alias("w")).filter(
         F.size("w") >= 5
@@ -2208,8 +2136,8 @@ def q288_snapshot_incremental_neardup(
     corpus_v1 = vt.read(version=1)
     delta = vt.changes(1).select("doc_id", "text")  # only v2's files
 
-    idx = build_lsh_index(corpus_v1, portable=True)
-    return incremental_neardup(idx, corpus_v1, delta, portable=True)
+    idx = build_lsh_index(corpus_v1)
+    return incremental_neardup(idx, corpus_v1, delta)
 
 
 _Q289_URL_SYNTH = """
@@ -2416,7 +2344,7 @@ def _q321_band_expr(bands: int) -> str:
         f"x -> CAST(x AS VARCHAR)), ',')"
     )
     return f"""
-  SELECT {bands} AS bands, doc_id, b AS band, {_PH.format(inner)} AS bh
+  SELECT {bands} AS bands, doc_id, b AS band, {sql_portable_hash64(inner)} AS bh
   FROM sig, (SELECT unnest(range(0, {bands})) AS b) bs"""
 
 
@@ -2465,25 +2393,21 @@ def q321_lsh_band_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     when arms materialize sequentially). Concatenating all three
     configs' band arrays into ONE explode scans the corpus exactly
     once — no checkpoint, no union: 30 s at the same replica."""
-    from ..functions.compat import portable_hash64
-
     d = load_table(spark, sf_dir, "documents")
     # Same undersplit guard as _lsh_candidate_pairs_frame: the md5
     # base-hash map is the CPU stage, and a 4-file fixture scan would
     # otherwise serialize it on 4 of 32 cores (the other half of the
     # round-7 250 s probe catch). r10: shared hash-keyed guard.
     d = rebalance_if_undersplit(d, F.col("doc_id"))
-    sh = d.select(
-        "doc_id", word_shingles(F.col("text"), 3).alias("shingles")
-    ).withColumn(
-        "_hm",
-        F.transform("shingles", lambda s: portable_hash64(s) % _MH_P),
+    sh = _with_base_hashes(
+        d.select("doc_id", word_shingles(F.col("text"), 3).alias("shingles")),
+        "shingles",
     )
     def _tagged(bands: int):
         # NB: the transform lambda must stay single-arg — a second
         # parameter makes Spark pass the ARRAY INDEX into it
         return F.transform(
-            lsh_bands(F.col("sig"), bands, 32 // bands, portable=True),
+            lsh_bands(F.col("sig"), bands, 32 // bands),
             lambda s: F.struct(
                 F.lit(bands).alias("bands"),
                 s["band"].alias("band"),
@@ -2616,7 +2540,7 @@ def q330_bucketed_incremental_neardup(
     )
     batch = d.filter(F.col("doc_id") >= 450).unionAll(injected)
 
-    idx = build_lsh_index(corpus, portable=True)
+    idx = build_lsh_index(corpus)
     t_idx = session_table(spark, "q330_idx")
     t_plain = session_table(spark, "q330_idx_plain")
     write_bucketed(idx, t_idx, ["band", "band_hash"])
@@ -2638,7 +2562,6 @@ def q330_bucketed_incremental_neardup(
         32,
         8,
         4,
-        True,
     )
     n_bucketed = exchange_count(
         probe.join(spark.table(t_idx).hint("merge"), ["band", "band_hash"])
@@ -2652,7 +2575,5 @@ def q330_bucketed_incremental_neardup(
             f"{n_plain} unbucketed — the (band, band_hash) bucket "
             "layout was not honored at read time"
         )
-    res = incremental_neardup(
-        spark.table(t_idx).hint("merge"), corpus, batch, portable=True
-    )
+    res = incremental_neardup(spark.table(t_idx).hint("merge"), corpus, batch)
     return res.withColumn("idx_exchange_free", F.lit(True))

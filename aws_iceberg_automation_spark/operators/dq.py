@@ -18,9 +18,9 @@ rules it carries:
 - ``profile(df, cols)`` computes per-column null counts, exact distinct
   counts, and min/max in the same single-aggregate style. Multiple
   exact COUNT(DISTINCT) in one aggregate plans as one Expand +
-  two-phase agg — input ×|cols| rows on the wire but still one scan;
-  at 100 TB swap exact for ``approx_count_distinct`` per column (the
-  engine's q41 pattern) if ±2% suffices.
+  two-phase agg — input ×|cols| rows on the wire but still one scan
+  (measured 17.8 s at the 20× probe vs ~3 s for the rest of the DQ
+  suite).
 - ``orphan_rows(child, parent, fk, pk)`` counts child rows whose FK
   has no parent — a LEFT ANTI join that AQE broadcasts when the parent
   side is small and shuffles on the key otherwise; this is the one DQ
@@ -74,27 +74,18 @@ def validate(df: DataFrame, rules: list[Rule]) -> DataFrame:
     )
 
 
-def profile(
-    df: DataFrame, cols: dict[str, Column], approx: bool = False
-) -> DataFrame:
+def profile(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
     """One-scan column profile → long (col_name, n_nulls, n_distinct,
     min_val, max_val). ``cols`` maps column name → a *typed comparable*
     view (decimal/date/string) — min/max compare in that type's order
     and only the final result renders to string, so numerics never
-    suffer lexicographic min/max ("7" > "10").
-
-    ``approx=True`` swaps exact COUNT(DISTINCT) for HLL++
-    approx_count_distinct (±2%): the exact path plans an Expand that
-    multiplies scan output ×|cols| (measured 17.8 s at the 20× probe vs
-    ~3 s for the rest of the DQ suite) — at 100 TB approx is the
-    default posture, exact the audit mode."""
-    distinct = F.approx_count_distinct if approx else F.count_distinct
+    suffer lexicographic min/max ("7" > "10")."""
     aggs: list[Column] = [F.count(F.lit(1)).alias("__n")]
     for name, typed in cols.items():
         c = F.col(name)
         aggs += [
             F.sum(c.isNull().cast("bigint")).alias(f"{name}__nulls"),
-            distinct(c).alias(f"{name}__distinct"),
+            F.count_distinct(c).alias(f"{name}__distinct"),
             F.min(typed).cast("string").alias(f"{name}__min"),
             F.max(typed).cast("string").alias(f"{name}__max"),
         ]

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.compat import month_day, portable_hash64, sql_portable_hash64
+from ..functions.compat import cms_bucket, month_day, sql_cms_bucket
 from ..functions.ranking import topn_ranked
 from ..io import load_table
 from ..registry import register
@@ -326,31 +326,8 @@ def q85g_freq_terms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cms_bucket(item: Column, seed: Column, width: int, portable: bool) -> Column:
-    """The CMS hash-family member: bucket of ``item`` under ``seed``.
-    ``portable=True`` uses the md5-derived cross-engine hash (DuckDB can
-    recompute the cells — see functions/compat.portable_hash64);
-    ``portable=False`` is the production xxhash64 path (single JVM hash,
-    no digest). Every CMS guarantee (est ≥ true, ε·N bound, merge-
-    ability) is hash-family-independent."""
-    if portable:
-        key = F.concat(seed.cast("string"), F.lit(":"), item.cast("string"))
-        return F.pmod(portable_hash64(key), width)
-    return F.pmod(F.xxhash64(item, seed), width)
-
-
-def sql_cms_bucket(item: str, seed: str, width: int) -> str:
-    """DuckDB fragment value-equal to ``cms_bucket(..., portable=True)``."""
-    key = f"(CAST({seed} AS VARCHAR) || ':' || CAST({item} AS VARCHAR))"
-    return f"({sql_portable_hash64(key)} % {width})"
-
-
 def countmin_cells(
-    items: DataFrame,
-    col: str,
-    depth: int = 4,
-    width: int = 1024,
-    portable: bool = False,
+    items: DataFrame, col: str, depth: int = 4, width: int = 1024
 ) -> DataFrame:
     """Count-Min Sketch build over an item stream: per (seed, bucket)
     cell counts, bucket = h_seed(item) mod width. One two-phase
@@ -363,9 +340,7 @@ def countmin_cells(
         items.select(F.col(col).alias("_item"), seeds)
         .select(
             "seed",
-            cms_bucket(F.col("_item"), F.col("seed"), width, portable).alias(
-                "bucket"
-            ),
+            cms_bucket(F.col("_item"), F.col("seed"), width).alias("bucket"),
         )
         .groupBy("seed", "bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cell"))
@@ -421,12 +396,11 @@ def q193_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle-backed (VERDICT r03 ask #2): the sketch runs on the portable
     md5-derived hash family so DuckDB rebuilds the identical 4096 cells
-    and re-derives every estimate; production swaps xxhash64
-    (``portable=False``) — the one-sided bound is hash-independent."""
+    and re-derives every estimate."""
     depth, width = 4, 1024
     d = load_table(spark, sf_dir, "documents")
     terms = d.select(F.explode(F.split("text", " ")).alias("term"))
-    cells = countmin_cells(terms, "term", depth, width, portable=True)
+    cells = countmin_cells(terms, "term", depth, width)
 
     exact_top = topn_ranked(
         terms.groupBy("term").agg(F.count(F.lit(1)).alias("exact_count")),
@@ -438,9 +412,7 @@ def q193_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exact_count",
         "rk",
         F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("seed"),
-    ).withColumn(
-        "bucket", cms_bucket(F.col("term"), F.col("seed"), width, portable=True)
-    )
+    ).withColumn("bucket", cms_bucket(F.col("term"), F.col("seed"), width))
     est = (
         probes.join(F.broadcast(cells), ["seed", "bucket"])
         .groupBy("term", "exact_count", "rk")
@@ -1023,12 +995,8 @@ def q195_cms_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").cast("string").alias("k")
     )
-    cms_o = countmin_cells(o, "k", depth, width, portable=True).withColumnRenamed(
-        "cell", "r"
-    )
-    cms_l = countmin_cells(li, "k", depth, width, portable=True).withColumnRenamed(
-        "cell", "s"
-    )
+    cms_o = countmin_cells(o, "k", depth, width).withColumnRenamed("cell", "r")
+    cms_l = countmin_cells(li, "k", depth, width).withColumnRenamed("cell", "s")
     est = (
         cms_o.join(cms_l, ["seed", "bucket"])
         .groupBy("seed")

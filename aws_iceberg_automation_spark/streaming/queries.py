@@ -274,7 +274,7 @@ SELECT user_id, COUNT(*) AS events_seen FROM events GROUP BY user_id
 
 
 def _cms_cells_oracle() -> str:
-    from ..operators.text import sql_cms_bucket
+    from ..functions.compat import sql_cms_bucket
 
     return f"""
 SELECT seed, {sql_cms_bucket("user_id", "seed", 1024)} AS bucket,
@@ -305,14 +305,13 @@ def q194_stream_countmin_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streaming state cell-for-cell — the driver's hash row IS the
     mergeability proof (integer counts are order- and batching-
     insensitive), doubled by the pytest streaming-equals-batch
-    invariant (test_streaming). Production swaps xxhash64."""
+    invariant (test_streaming)."""
     from ..operators.text import countmin_cells
 
     # the SAME build as q193 (shared helper — pure expressions work on
     # streaming frames unchanged), keyed on user_id instead of terms
     cells = countmin_cells(
-        _stream(spark, sf_dir).select("user_id"), "user_id", 4, 1024,
-        portable=True,
+        _stream(spark, sf_dir).select("user_id"), "user_id", 4, 1024
     )
     return jobs.run_to_memory(cells, output_mode="complete")
 

@@ -34,16 +34,12 @@ def docs_with_dups(spark):
     return d.unionByName(dups)
 
 
-@pytest.mark.parametrize("portable", [False, True])
-def test_minhash_lsh_finds_injected_neardups(docs_with_dups, portable):
-    """Both hash families — production xxhash64 and the oracle-checkable
-    portable/universal family — must detect the injected near-dups:
-    banding probability is hash-independent, and this is the pytest
-    proof of that claim for the portable path (its fixture-level
-    correctness is separately driver-hash-checked via q82)."""
-    pairs = minhash_candidate_pairs(
-        docs_with_dups, threshold=0.5, portable=portable
-    ).collect()
+def test_minhash_lsh_finds_injected_neardups(docs_with_dups):
+    """The sketch hash family (portable md5 base hashes + universal
+    permutations) must detect the injected near-dups — the pytest proof
+    of LSH recall on this corpus (its fixture-level correctness is
+    separately driver-hash-checked via q82)."""
+    pairs = minhash_candidate_pairs(docs_with_dups, threshold=0.5).collect()
     found = {(r.doc_id_a, r.doc_id_b) for r in pairs}
     expected = {(i, i + 100000) for i in range(10)}
     missing = expected - found
@@ -1407,18 +1403,16 @@ def test_minhash_signature_projection_survives_collapse(spark):
     exist in the OPTIMIZED plan (a collapsed plan eliminates the
     intermediate alias entirely), so an optimizer-rule or guard
     regression reddens here instead of at the next 20× probe."""
-    from aws_iceberg_automation_spark.functions.compat import portable_hash64
     from aws_iceberg_automation_spark.operators.dedup import (
-        _MH_P,
+        _with_base_hashes,
         minhash_from_base_hashes,
         word_shingles,
     )
 
     d = load_table(spark, SF_DIR, "documents")
-    sh = d.select(
-        "doc_id", word_shingles(F.col("text"), 3).alias("shingles")
-    ).withColumn(
-        "_hm", F.transform("shingles", lambda s: portable_hash64(s) % _MH_P)
+    sh = _with_base_hashes(
+        d.select("doc_id", word_shingles(F.col("text"), 3).alias("shingles")),
+        "shingles",
     )
     sig = sh.select(
         "doc_id", minhash_from_base_hashes(F.col("_hm"), 32).alias("sig")
@@ -1451,7 +1445,7 @@ def test_bucketed_lsh_index_join_plans_no_index_side_exchange(spark):
     from aws_iceberg_automation_spark.io import load_table
 
     d = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    idx = build_lsh_index(d.filter(F.col("doc_id") < 100), portable=True)
+    idx = build_lsh_index(d.filter(F.col("doc_id") < 100))
     t = session_table(spark, "q330_pin_idx")
     write_bucketed(idx, t, ["band", "band_hash"])
     probe = idx.select("band", "band_hash").distinct().limit(50)

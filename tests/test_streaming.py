@@ -498,9 +498,7 @@ def test_stream_countmin_equals_batch_build(spark):
     from aws_iceberg_automation_spark.operators.text import countmin_cells
 
     ev = load_table(spark, SF_DIR, "events")
-    batch = countmin_cells(
-        ev.select("user_id"), "user_id", 4, 1024, portable=True
-    ).collect()
+    batch = countmin_cells(ev.select("user_id"), "user_id", 4, 1024).collect()
     assert sorted(map(tuple, streamed)) == sorted(map(tuple, batch))
     n_events = ev.count()
     per_seed = {}
